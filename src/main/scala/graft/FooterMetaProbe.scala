@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * over the live set directly — the exact code path `writeData` and
   * `compact` pay per commit.
   *
-  * Usage: `graft.FooterMetaProbe [sfDir]`. Lives in the queries
-  * package for access to the package-private footer path.
+  * Usage: `graft.queries.FooterMetaProbe [sfDir]`. Lives in the
+  * queries package for access to the package-private footer path.
   */
 object FooterMetaProbe {
   def main(args: Array[String]): Unit = {

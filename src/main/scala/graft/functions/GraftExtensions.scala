@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
-import graft.functions.expressions.{AdcDistance, BitPack, BloomOrAgg, BoundedTopK, CharNgrams, CompressRatio, CosineSimilarity, DotProduct, HyperplaneBuckets, JaccardSim, JsonLongField, L2DistanceSq, LangId, LoadBytes, MinhashSignature, NgramHashes, PqCodes, RewriteHofDotProduct, SimHash32, SimHashBits, TextFeatures, VectorGram, WordGramHashes, WordShingles}
+import graft.functions.expressions.{AdcDistance, BitPack, BloomOrAgg, BoundedTopK, CharNgrams, CompressRatio, CosineSimilarity, DotProduct, HyperplaneBuckets, JaccardSim, JsonLongField, L2DistanceSq, LangId, LoadBytes, MinhashSignature, NgramHashes, PqCodes, RewriteHofDotProduct, SimHash32, SimHashBits, TextFeatures, TopItemShare, VectorGram, WordGramHashes, WordNgrams, WordShingles}
 import graft.operators.SerializableHadoopConf
 import graft.plans.HoistPayloadLoad
 
@@ -115,6 +115,18 @@ object GraftFunctions {
         require(args.length == 2,
           "word_gram_hashes takes (text, n literal)")
         WordGramHashes(args.head, foldableInt(args(1), "word_gram_hashes"))
+      }),
+    (FunctionIdentifier("word_ngrams"),
+      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
+      { args: Seq[Expression] =>
+        require(args.length == 2, "word_ngrams takes (text, n literal)")
+        WordNgrams(args.head, foldableInt(args(1), "word_ngrams"))
+      }),
+    (FunctionIdentifier("top_item_share"),
+      new ExpressionInfo(classOf[TopItemShare].getName, "top_item_share"),
+      { args: Seq[Expression] =>
+        require(args.length == 1, "top_item_share takes exactly 1 argument")
+        TopItemShare(args.head)
       }),
     (FunctionIdentifier("simhash_bits"),
       new ExpressionInfo(classOf[SimHashBits].getName, "simhash_bits"),
@@ -333,6 +345,19 @@ object GraftFunctions {
   def wordGramHashes(text: Column, n: Int): Column =
     call_function("word_gram_hashes", text,
       org.apache.spark.sql.functions.lit(n))
+
+  /** Fused lowercase→tokenize→positional-word-n-grams (see
+    * [[graft.functions.expressions.WordNgrams]]); bit-identical to
+    * [[TextFunctions.wordNgrams]], element order included. */
+  def wordNgramsNative(text: Column, n: Int): Column =
+    call_function("word_ngrams", text,
+      org.apache.spark.sql.functions.lit(n))
+
+  /** One hash-count pass for the most frequent element's occurrence
+    * share (see [[graft.functions.expressions.TopItemShare]]);
+    * bit-identical to [[TextFunctions.topItemShare]]. */
+  def topItemShareNative(items: Column): Column =
+    call_function("top_item_share", items)
 
   /** Codegen'd SimHash at any width ≤ 63 (see
     * [[graft.functions.expressions.SimHashBits]]); bit-identical to

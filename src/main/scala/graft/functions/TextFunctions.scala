@@ -341,10 +341,12 @@ object TextFunctions {
         size(ts).cast("double"))
   }
 
-  /** Share of the single most frequent token (unrounded). The
-    * per-distinct-token count is O(d·n) per doc — cheaper than an
-    * explode→groupBy→join-back round trip until per-doc vocabularies
-    * pass ~10³ (then the explode shape wins; same answer). */
+  /** Share of the single most frequent token (unrounded) — the
+    * composable parity reference: it counts every distinct token with
+    * its own interpreted scan (quadratic per doc). Executed paths use
+    * the native one-pass
+    * `GraftFunctions.topItemShareNative(tokens(lower(text)))`, which
+    * the parity spec pins to this formula and the oracles mirror. */
   def topTokenShare(text: Column): Column = {
     val ts = tokens(lower(text))
     val counts = transform(array_distinct(ts),
@@ -356,7 +358,9 @@ object TextFunctions {
 
   /** Positional word n-grams of the lowercased text: element i spans
     * tokens [i, i+n). Empty array (not null) when the doc has fewer
-    * than n tokens, so generators drop the row cleanly. */
+    * than n tokens, so generators drop the row cleanly. The composable
+    * parity reference of the native `GraftFunctions.wordNgramsNative`
+    * (one walk per doc; this form interprets a lambda per window). */
   def wordNgrams(text: Column, n: Int): Column = {
     val ts = tokens(lower(text))
     when(size(ts) < n, array().cast("array<string>"))
@@ -366,7 +370,10 @@ object TextFunctions {
 
   /** Occurrence share of the single most frequent element (unrounded;
     * 0.0 for empty input) — the n-gram generalization of
-    * [[topTokenShare]], same O(d·n) in-row shape and crossover note. */
+    * [[topTokenShare]] and, like it, the composable parity reference:
+    * quadratic per row. Executed paths use the native one-pass
+    * `GraftFunctions.topItemShareNative`, pinned to this formula by
+    * the parity spec. */
   def topItemShare(items: Column): Column = {
     val counts = transform(array_distinct(items),
       x => size(filter(items, y => y === x)))

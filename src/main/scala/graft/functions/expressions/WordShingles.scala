@@ -44,37 +44,13 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   override def prettyName: String = "word_shingles"
 
   override def nullSafeEval(input: Any): Any = {
-    // normalize: same lowercase as the built-in `lower`, then \s+
-    // split directly (collapse-then-split ≡ split on runs)
-    val lowered = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val raw = WordShingles.Ws.split(lowered)
-    // drop empties (a leading separator yields one empty first token)
-    val toks = new java.util.ArrayList[String](raw.length)
-    var i = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) toks.add(raw(i)); i += 1
-    }
-    val n = toks.size()
-    if (n == 0) return new GenericArrayData(Array.empty[Any])
-    val out: Array[Any] =
-      if (n <= k) Array[Any](UTF8String.fromString(String.join(" ", toks)))
-      else {
-        val arr = new Array[Any](n - k + 1)
-        val sb = new java.lang.StringBuilder()
-        var s = 0
-        while (s <= n - k) {
-          sb.setLength(0)
-          var j = 0
-          while (j < k) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks.get(s + j)); j += 1
-          }
-          arr(s) = UTF8String.fromString(sb.toString)
-          s += 1
-        }
-        arr
-      }
-    new GenericArrayData(out)
+    // normalize → tokens: collapse-then-split ≡ split on runs; a doc
+    // shorter than k is one window of all its tokens
+    val toks = WordShingles.lowerTokens(input.asInstanceOf[UTF8String])
+    val grams =
+      if (toks.isEmpty) Array.empty[UTF8String]
+      else WordShingles.positionalGrams(toks, math.min(k, toks.length))
+    new GenericArrayData(grams.asInstanceOf[Array[Any]])
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -92,6 +68,34 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
 object WordShingles {
   /** Same pattern the composable form passes to `split`. */
   private[expressions] val Ws: Pattern = Pattern.compile("\\s+")
+
+  /** Whitespace tokens of the lowercased text, empties dropped — the
+    * composable `tokens(lower(text))`: same `UTF8String.toLowerCase`
+    * the built-in `lower` uses, same Java `\s+` split as the built-in
+    * `split` (a leading separator yields one empty first token). */
+  private[expressions] def lowerTokens(input: UTF8String): Array[String] =
+    Ws.split(input.toLowerCase.toString).filter(_.nonEmpty)
+
+  /** The shared positional-gram walk of [[WordShingles]],
+    * [[WordGramHashes]] and [[WordNgrams]] (single source of truth for
+    * the parity-critical join): gram i joins tokens [i, i+n) with
+    * single spaces; fewer than n tokens yield no grams. */
+  private[expressions] def positionalGrams(toks: Array[String], n: Int)
+      : Array[UTF8String] = {
+    if (toks.length < n) return Array.empty
+    val out = new Array[UTF8String](toks.length - n + 1)
+    val sb = new java.lang.StringBuilder()
+    var s = 0
+    while (s < out.length) {
+      sb.setLength(0)
+      sb.append(toks(s))
+      var j = 1
+      while (j < n) { sb.append(' ').append(toks(s + j)); j += 1 }
+      out(s) = UTF8String.fromString(sb.toString)
+      s += 1
+    }
+    out
+  }
 }
 
 /** Native positional word-n-gram 60-bit hashes: lowercase →
@@ -131,27 +135,12 @@ case class WordGramHashes(child: Expression, n: Int)
   override def prettyName: String = "word_gram_hashes"
 
   override def nullSafeEval(input: Any): Any = {
-    val lowered = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val raw = WordShingles.Ws.split(lowered)
-    val toks = new java.util.ArrayList[String](raw.length)
-    var i = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) toks.add(raw(i)); i += 1
-    }
-    val m = toks.size()
-    if (m < n) return new GenericArrayData(Array.empty[Long])
-    val out = new Array[Long](m - n + 1)
-    val sb = new java.lang.StringBuilder()
+    val grams = WordShingles.positionalGrams(
+      WordShingles.lowerTokens(input.asInstanceOf[UTF8String]), n)
+    val out = new Array[Long](grams.length)
     var s = 0
-    while (s <= m - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(s + j)); j += 1
-      }
-      out(s) = MinhashSignature.hash60(UTF8String.fromString(sb.toString))
-      s += 1
+    while (s < grams.length) {
+      out(s) = MinhashSignature.hash60(grams(s)); s += 1
     }
     new GenericArrayData(out)
   }
@@ -166,4 +155,50 @@ case class WordGramHashes(child: Expression, n: Int)
 
   override protected def withNewChildInternal(
       newChild: Expression): WordGramHashes = copy(child = newChild)
+}
+
+/** Native positional word n-grams: lowercase → whitespace tokens
+  * (empties dropped) → element i joins tokens [i, i+n) with single
+  * spaces — one JVM pass per document, the [[WordGramHashes]] walk
+  * without the hashing.
+  *
+  * Bit-identical to the composable `TextFunctions.wordNgrams(text, n)`
+  * (`transform(sequence(0, size(ts) - n), i -> concat_ws(" ",
+  * slice(ts, i + 1, n)))` over `tokens(lower(text))`), element order
+  * included; the parity spec pins it. The composable form rebuilds
+  * the token array inside the lambda for every window.
+  *
+  * Null text → null; fewer than n tokens → empty array.
+  */
+case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+
+  require(n > 0, "word_ngrams requires n > 0")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"word_ngrams requires string, got $t")
+    }
+
+  override def dataType: DataType =
+    ArrayType(StringType, containsNull = false)
+
+  override def prettyName: String = "word_ngrams"
+
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(WordShingles.positionalGrams(
+      WordShingles.lowerTokens(input.asInstanceOf[UTF8String]), n)
+      .asInstanceOf[Array[Any]])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("wordNgrams", this)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
+          $ref.nullSafeEval($a);""")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): WordNgrams = copy(child = newChild)
 }

@@ -85,8 +85,9 @@ final case class TextQualityFilter(textColumn: String = "text")
 /** Redundancy column filter: deflate compression ratio plus
   * repetition signals (distinct-token ratio, top-token share) — the
   * Gopher-style gates a training pipeline filters on before spending
-  * model compute. Pure column expressions; `compress_ratio` is
-  * graft's native expression (registered by `applyColumnFilter`). */
+  * model compute. Pure column expressions; `compress_ratio` and
+  * `top_item_share` are graft's native expressions (registered by
+  * `applyColumnFilter`). */
 final case class RedundancyFilter(textColumn: String = "text")
     extends ColumnFilter {
   override def requiredColumns: Seq[String] = Seq(textColumn)
@@ -100,6 +101,7 @@ final case class RedundancyFilter(textColumn: String = "text")
         r4(graft.functions.GraftFunctions.compressRatio(text)),
       "distinct_token_ratio" ->
         r4(TextFunctions.distinctTokenRatio(text)),
-      "top_token_share" -> r4(TextFunctions.topTokenShare(text)))
+      "top_token_share" -> r4(graft.functions.GraftFunctions
+        .topItemShareNative(TextFunctions.tokens(lower(text)))))
   }
 }

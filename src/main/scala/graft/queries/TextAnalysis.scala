@@ -870,16 +870,19 @@ object TextAnalysis {
   /** Token-repetition signals per document (the Gopher-style
     * repetition rules a quality pipeline gates on): distinct-token
     * ratio and the share of the single most frequent token. Narrow
-    * per-row map; the inner count-per-distinct-token is O(d·n) per
-    * doc, which beats an explode→groupBy→join-back round trip until
-    * vocabularies grow past ~10³ per doc (then the explode shape
-    * takes over — same answer, two shuffles). */
-  def textRepetition(spark: SparkSession, dir: String): DataFrame =
+    * per-row map, no shuffle: the top share is the native
+    * `top_item_share` over the lowercased tokens — one hash-count pass
+    * over a token array built once per row — bit-identical to the
+    * composable [[TextFunctions.topTokenShare]] the oracle mirrors. */
+  def textRepetition(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     Tables.fanOut(t(spark, dir, "documents")).select(
       col("doc_id"),
       tokenCount(lower(col("text"))).cast("long").as("n_tokens"),
       r4(distinctTokenRatio(col("text"))).as("distinct_ratio"),
-      r4(topTokenShare(col("text"))).as("top_token_share"))
+      r4(graft.functions.GraftFunctions.topItemShareNative(
+        tokens(lower(col("text"))))).as("top_token_share"))
+  }
 
   val textRepetitionSql: String =
     s"""WITH f AS (SELECT doc_id, $SqlToksLower AS ts FROM documents),
@@ -897,17 +900,26 @@ object TextAnalysis {
     * the single most frequent word 2-gram and 3-gram per document.
     * High shares mark boilerplate/templated text that token-level
     * signals ([[textRepetition]]) miss — a doc can have a healthy
-    * distinct-token ratio while looping one phrase. Same in-row
-    * O(d·n) shape (and explode-crossover note) as textRepetition;
-    * no shuffle, scales linearly. */
-  def textTopgram(spark: SparkSession, dir: String): DataFrame =
+    * distinct-token ratio while looping one phrase. Narrow per-row
+    * map, no shuffle, linear per document: the native `word_ngrams`
+    * builds each gram array in one walk and `top_item_share` counts
+    * it in one hash pass. Both are bit-identical to the composable
+    * [[TextFunctions.wordNgrams]] / [[TextFunctions.topItemShare]]
+    * forms the oracle mirrors, which are quadratic per document. */
+  def textTopgram(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     Tables.fanOut(t(spark, dir, "documents"))
-      .withColumn("g2", wordNgrams(col("text"), 2))
-      .withColumn("g3", wordNgrams(col("text"), 3))
+      .withColumn("g2",
+        graft.functions.GraftFunctions.wordNgramsNative(col("text"), 2))
+      .withColumn("g3",
+        graft.functions.GraftFunctions.wordNgramsNative(col("text"), 3))
       .select(col("doc_id"),
         size(col("g2")).cast("long").as("n_bigrams"),
-        r4(topItemShare(col("g2"))).as("top_bigram_share"),
-        r4(topItemShare(col("g3"))).as("top_trigram_share"))
+        r4(graft.functions.GraftFunctions.topItemShareNative(col("g2")))
+          .as("top_bigram_share"),
+        r4(graft.functions.GraftFunctions.topItemShareNative(col("g3")))
+          .as("top_trigram_share"))
+  }
 
   val textTopgramSql: String =
     s"""WITH f AS (SELECT doc_id, $SqlToksLower AS ts FROM documents),

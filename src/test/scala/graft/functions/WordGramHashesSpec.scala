@@ -17,19 +17,7 @@ class WordGramHashesSpec extends SparkSpec {
 
   GraftFunctions.register(spark)
 
-  private val corpus = Seq(
-    "one two three four five six",
-    "  leading and trailing  ",
-    "\ttabs\tbetween\ttokens\t",
-    "newlines\nare\nseparators\ntoo\n",
-    "short doc",
-    "a",
-    "",
-    "   ",
-    "\t\n",
-    "MiXeD Case TOKENS repeat mixed case tokens",
-    "unicode: café naïve 你好 你好 tokens here",
-    "exactly five tokens right here")
+  import WordGramHashesSpec.corpus
 
   test("native word_gram_hashes == shingleHashes(wordNgrams), positions too") {
     for (n <- Seq(2, 3, 5)) {
@@ -63,4 +51,22 @@ class WordGramHashesSpec extends SparkSpec {
           s"'${r.getString(0)}': ${r.getLong(1)} vs ${r.getLong(2)}")
       }
   }
+}
+
+object WordGramHashesSpec {
+  /** Well-formed and adversarial whitespace shapes, shared with the
+    * other positional-gram parity suites. */
+  val corpus: Seq[String] = Seq(
+    "one two three four five six",
+    "  leading and trailing  ",
+    "\ttabs\tbetween\ttokens\t",
+    "newlines\nare\nseparators\ntoo\n",
+    "short doc",
+    "a",
+    "",
+    "   ",
+    "\t\n",
+    "MiXeD Case TOKENS repeat mixed case tokens",
+    "unicode: café naïve 你好 你好 tokens here",
+    "exactly five tokens right here")
 }
