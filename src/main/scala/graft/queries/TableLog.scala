@@ -130,6 +130,13 @@ object TableLog {
           java.nio.file.Paths.get(p.toUri.getPath),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        // the move leaves the temp's checksum sibling behind (the
+        // link branch drops it through fs.delete)
+        fs match {
+          case cfs: org.apache.hadoop.fs.ChecksumFileSystem =>
+            cfs.getRawFileSystem.delete(cfs.getChecksumFile(tmp), false)
+          case _ =>
+        }
         true
       } else {
         try {

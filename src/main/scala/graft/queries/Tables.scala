@@ -30,22 +30,26 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
       org.apache.spark.sql.types.StructType]()
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts has shipped as TIMESTAMP(NANOS) in some testdata
     // generations (which Spark 4 rejects unless read as a long) and as
     // TIMESTAMP(MICROS) in others. nanosAsLong covers the former;
     // normalizeEventTs below folds every variant to one contract.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (!spark.conf.getOption(NanosAsLong).contains("true"))
+      spark.conf.set(NanosAsLong, "true")
     val path = s"$sfDir/$name.parquet"
     // keyed by (path, mtime, length), not path alone: a regenerated
     // dataset at the same path must re-infer, not silently read with
-    // the stale shape (advice-caught). One local stat per call — far
-    // cheaper than the one-task inference job it avoids. On a
-    // non-local filesystem the stat degrades to (0, 0), i.e. the old
-    // path-only behavior.
-    val f = new java.io.File(path)
+    // the stale shape. One stat on the path's own filesystem per call
+    // (so `file:` URIs and remote paths are keyed too) — far cheaper
+    // than the one-task inference job it avoids.
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
     val schema = schemaCache.computeIfAbsent(
-      (path, f.lastModified, f.length),
+      (path, st.getModificationTime, st.getLen),
       _ => spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeEventTs(df) else df

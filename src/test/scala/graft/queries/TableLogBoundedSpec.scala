@@ -496,6 +496,21 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
       .forall(!_.getPath.getName.endsWith(".tmp")))
   }
 
+  test("overwriting publish on the local filesystem leaves only the " +
+      "final file: no temp checksum debris") {
+    val dir = Files.createTempDirectory("tl-over").toString
+    val f = fs(dir)
+    f.mkdirs(new Path(s"$dir/_log"))
+    val p = new Path(s"$dir/_log/_last_checkpoint")
+    (1 to 3).foreach { v =>
+      assert(TableLog.writeSmallFileAtomic(f, p, v.toString,
+        overwrite = true))
+    }
+    assert(TableLog.readSmallFile(f, p) == "3")
+    val names = new java.io.File(s"$dir/_log").list().toSeq
+    assert(names == Seq("_last_checkpoint"), names)
+  }
+
   test("upgrading a LEGACY (format-1) checkpoint back-fills txn marks " +
       "so exactly-once survives the upgrade + truncation") {
     val dir = Files.createTempDirectory("tl-legacy").toString
