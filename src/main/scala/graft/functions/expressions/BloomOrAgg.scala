@@ -26,10 +26,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * The hash DIE feeding this aggregate is the caller's choice: the
   * catalog uses the md5-based hash60 so the DuckDB oracle can mirror
-  * it; `graft.BloomProbe` measured the die as second-order at 100M
-  * rows (xxhash64 22.9 s vs md5 23.9 s JIT-warm — the per-group
-  * buffer aggregation dominates), so there is no production reason
-  * to leave the oracle-friendly die. */
+  * it; NOTES.md (round-6 continuation, third session) records the
+  * die as second-order at 100M rows (xxhash64 22.9 s vs md5 23.9 s
+  * JIT-warm — the per-group buffer aggregation dominates), so there
+  * is no production reason to leave the oracle-friendly die. */
 case class BloomOrAgg(
     child: Expression,
     words: Int,

@@ -10,8 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * JSON object column — the `get_json_object(props, '$.k')
   * .cast("long")` hot path, without a Jackson parse per row.
   *
-  * Motivation (AlsProbe, 10M rows, warm): the full ALS pipeline costs
-  * 1.3 s with extraction stubbed out and 6.8 s with get_json_object —
+  * Motivation (NOTES.md, round-7 work log: 10M rows, warm): the
+  * full ALS pipeline costs 1.3 s with extraction stubbed out and
+  * 6.8 s with get_json_object —
   * the general-purpose JSON parser IS ~80% of q_als_step and the
   * event-graph queries, and `from_json` with a one-field schema is
   * no better (7.7 s). This expression scans the UTF8String bytes

@@ -31,17 +31,13 @@ import graft.functions.expressions.LoadBytes
   *  - 1:N joins: rows duplicated by the join re-read the payload once
   *    per OUTPUT row. That trades reads for shuffle — the right
   *    default when bytes ≫ path (always) and the join is the
-  *    reference's 1:1 metadata-merge shape. Set
-  *    `spark.graft.payloadHoist.enabled=false` to pin loads where
-  *    they were written.
+  *    reference's 1:1 metadata-merge shape.
   *
   * Registered through both extension paths
   * ([[graft.functions.GraftExtensions]] config and
   * [[graft.functions.GraftFunctions.register]]).
   */
 object HoistPayloadLoad extends Rule[LogicalPlan] {
-
-  private val EnabledKey = "spark.graft.payloadHoist.enabled"
 
   /** An alias whose computation contains a payload load — the whole
     * computed column (e.g. `length(load_bytes(path)) AS len`) hoists
@@ -95,8 +91,7 @@ object HoistPayloadLoad extends Rule[LogicalPlan] {
       case _ => node
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(EnabledKey, "true") != "true") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case n: Filter if n.child.isInstanceOf[Project] =>
         hoistUnary(n, n.child.asInstanceOf[Project])
@@ -175,5 +170,4 @@ object HoistPayloadLoad extends Rule[LogicalPlan] {
           case None => up
         }
     }
-  }
 }

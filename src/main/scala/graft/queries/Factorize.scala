@@ -51,9 +51,9 @@ object Factorize {
   def alsStep(spark: SparkSession, dir: String): DataFrame = {
     // native byte-scan extraction (json_long): at 100M events the
     // JSON parse IS the query's constant — the two exchanges are
-    // already map-side combined — and AlsProbe measured the Jackson
-    // paths (get_json_object 6.5 s, from_json 6.9 s at 10M rows)
-    // against 1.7 s with the scan (whole pipeline)
+    // already map-side combined — and NOTES.md (round-7 work log)
+    // records the Jackson paths (get_json_object 6.5 s, from_json
+    // 6.9 s at 10M rows) against 1.7 s with the scan (whole pipeline)
     graft.functions.GraftFunctions.register(spark)
     val ratings = t(spark, dir, "events")
       .select(col("user_id"),

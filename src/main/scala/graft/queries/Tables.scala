@@ -25,10 +25,13 @@ object Tables {
     * immutable testdata footers hundreds of times (measured ~30-60 ms
     * per read). This caches METADATA only — never rows, never results
     * — the exact class of cache a catalog/metastore provides for real
-    * tables and Spark itself provides for file listings. */
+    * tables and Spark itself provides for file listings. One entry
+    * per path, stamped with the (mtime, length) it was inferred at. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String,
+      (Long, Long, org.apache.spark.sql.types.StructType)]()
+
+  private[queries] def schemaCacheSize: Int = schemaCache.size
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -40,17 +43,19 @@ object Tables {
     if (!spark.conf.getOption(NanosAsLong).contains("true"))
       spark.conf.set(NanosAsLong, "true")
     val path = s"$sfDir/$name.parquet"
-    // keyed by (path, mtime, length), not path alone: a regenerated
-    // dataset at the same path must re-infer, not silently read with
-    // the stale shape. One stat on the path's own filesystem per call
-    // (so `file:` URIs and remote paths are keyed too) — far cheaper
-    // than the one-task inference job it avoids.
+    // A regenerated dataset at the same path (new mtime or length)
+    // re-infers and replaces its entry, so the cache never reads with
+    // a stale shape and holds one entry per path. One stat on the
+    // path's own filesystem per call (so `file:` URIs and remote paths
+    // are checked too) — far cheaper than the one-task inference job
+    // it avoids.
     val p = new org.apache.hadoop.fs.Path(path)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)
-    val schema = schemaCache.computeIfAbsent(
-      (path, st.getModificationTime, st.getLen),
-      _ => spark.read.parquet(path).schema)
+    val (mtime, len) = (st.getModificationTime, st.getLen)
+    val (_, _, schema) = schemaCache.compute(path, (_, cur) =>
+      if (cur != null && cur._1 == mtime && cur._2 == len) cur
+      else (mtime, len, spark.read.parquet(path).schema))
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeEventTs(df) else df
   }

@@ -118,10 +118,10 @@ object TimeSeries {
     * medallion pipeline). Key = (user_id, event_type); latest =
     * max (ts, event_id) with the unique event_id as tiebreak.
     *
-    * Plan choice — MEASURED, not assumed (CompactProbe, 100M events
-    * / 3.4M keys, checksum-verified equal outputs): the "obvious"
-    * shuffle-sparing alternative, keep-latest via an order-
-    * independent `max(struct(ts, event_id, value))` aggregate,
+    * Plan choice — MEASURED, not assumed (NOTES.md, round-4 work
+    * log: 100M events / 3.4M keys, checksum-verified equal outputs):
+    * the "obvious" shuffle-sparing alternative, keep-latest via an
+    * order-independent `max(struct(ts, event_id, value))` aggregate,
     * LOSES to this window in BOTH locality regimes — 51.7s vs 32.5s
     * on randomly-placed versions and 27.7s vs 5.8s when versions
     * co-locate per key — because a struct max buffer is not
@@ -130,9 +130,9 @@ object TimeSeries {
     * streaming pass over the sort the shuffle already pays. The
     * aggregate's only remaining regime is a network-bound cluster
     * shuffle of co-located wide rows (its partial step collapses
-    * each split to one row per key before the wire); CompactProbe
-    * keeps both plans runnable and asserts their election-checksum
-    * equality, which is the cross-plan proof. */
+    * each split to one row per key before the wire). Only the window
+    * plan ships; its correctness gate is the DuckDB oracle, and the
+    * aggregate's numbers stand as NOTES.md recorded them. */
   def eventsCompact(spark: SparkSession, dir: String): DataFrame = {
     // cross-engine ordering convention (the eventsAsofAttribution
     // rule): Spark's ts is a nano long while DuckDB may coerce
@@ -562,12 +562,12 @@ object TimeSeries {
     * rolling aggregate is bit-exact on both engines regardless of
     * float summation order.
     *
-    * ONE exchange serves both steps — MEASURED (RollProbe, 100M
-    * events, checksum-equal plans): hash(user_id) satisfies the
-    * (user_id, day) grouping's clustered-distribution requirement
-    * AND the window's partitionBy(user_id), so an explicit
-    * repartition on user_id lets the grain aggregate and the window
-    * share it — 21.7s vs 50.8s for the naive groupBy-then-window
+    * ONE exchange serves both steps — MEASURED (NOTES.md, round-5
+    * work log: 100M events, checksum-equal plans): hash(user_id)
+    * satisfies the (user_id, day) grouping's clustered-distribution
+    * requirement AND the window's partitionBy(user_id), so an
+    * explicit repartition on user_id lets the grain aggregate and the
+    * window share it — 21.7s vs 50.8s for the naive groupBy-then-window
     * double exchange (the grain barely collapses at ~1 event/user/
     * day, so the second grain-sized shuffle was nearly a full
     * re-shuffle). */

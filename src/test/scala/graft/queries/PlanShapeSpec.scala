@@ -56,7 +56,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Window"), p.take(1500))
     // hash(user_id) satisfies both the (user, day) grouping and the
     // window partitioning — a second grain-sized exchange is the
-    // measured 2.3× regression (RollProbe, NOTES.md)
+    // measured 2.3× regression (NOTES.md, round-5 work log)
     assert(countIn(p, "Exchange hashpartitioning") == 1, p.take(2000))
   }
 

@@ -2,6 +2,8 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class TablesSpec extends SparkSpec {
@@ -20,5 +22,18 @@ class TablesSpec extends SparkSpec {
     val again = Tables.t(spark, sf, "documents")
     assert(again.columns.toSeq == Seq("doc_id", "text", "score"))
     assert(again.count() == 2)
+  }
+
+  test("regenerating one path replaces its schema-cache entry instead " +
+      "of adding a key per generation") {
+    val sf = "file:" + Files.createTempDirectory("graft-tables").toString
+    val before = Tables.schemaCacheSize
+    Seq(Seq("doc_id"), Seq("doc_id", "a"), Seq("doc_id", "a", "b"))
+      .foreach { cols =>
+        spark.range(1).select(cols.map(col("id").as(_)): _*)
+          .write.mode("overwrite").parquet(s"$sf/documents.parquet")
+        assert(Tables.t(spark, sf, "documents").columns.toSeq == cols)
+      }
+    assert(Tables.schemaCacheSize == before + 1)
   }
 }
