@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.metrics.QueryCost
 
 /** Driver-run benchmark: times every catalog query at the configured
   * scale factor and prints ONE JSON line. Queries run in sorted name
@@ -12,23 +13,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * eliminate left joins against per-key aggregates — a query whose
   * cost lives in such a branch (e.g. a text-rebuild join) would time
   * as a bare scan. The noop sink consumes every column of every row,
-  * so the timed plan is the plan a real consumer pays for. */
+  * so the timed plan is the plan a real consumer pays for. The line
+  * is copied to `$SPARK_GRAFT_BENCH_JSON`, and each query's
+  * [[graft.metrics.QueryCost]] row to its `.queries.jsonl` sibling. */
 object Bench {
 
   /** Materialize the full result (all columns, all rows) without
     * writing anywhere. */
   private def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+
+  private def session(cpus: String): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus)
     val selected = if (args.nonEmpty) {
       val unknown = args.filterNot(SparkEntry.queries.contains)
       require(unknown.isEmpty,
@@ -43,10 +52,8 @@ object Bench {
     // to 13×, NOTES.md) land outside the timed pass. Warm-up runs at
     // the sibling sf0.001 when present — plan compilation is per
     // plan shape, not per data volume — so it adds seconds, not a
-    // second full-scale pass. SPARK_GRAFT_WARMUP=off skips (dev
-    // loops only; driver runs keep the default).
-    val timedSpark = if (
-        sys.env.getOrElse("SPARK_GRAFT_WARMUP", "on") != "off") {
+    // second full-scale pass.
+    val timedSpark = {
       val warmDir = {
         val sibling = new java.io.File(
           new java.io.File(sfDir).getParentFile, "sf0.001")
@@ -80,12 +87,7 @@ object Bench {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       System.gc()
-      val fresh = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val fresh = session(cpus)
       // absorber: the fresh context's one-time costs (scheduler/
       // backend spin-up, first-job task serialization, Hadoop FS +
       // parquet reader init) would otherwise land on whichever
@@ -115,15 +117,18 @@ object Bench {
             catch { case _: Throwable => () }
           }
       fresh
-    } else spark
-    timedSpark.sparkContext.setLogLevel("WARN")
+    }
+    // per-query cost, summed from the timed session's job events
+    val cost = new QueryCost
+    timedSpark.sparkContext.addSparkListener(cost)
     val results = selected.toSeq.sortBy(_._1).map {
       case (name, fn) =>
-        // label every job with its query (guide §1.3): event-log
-        // tooling can then attribute stages per query from ONE
-        // full-catalog run instead of 163 single-query JVMs. Metadata
-        // only — timing methodology unchanged.
+        // label every job with its query: `cost` (and any event-log
+        // reader) attributes jobs, stages and tasks per query from ONE
+        // full-catalog run. Metadata only — timing methodology
+        // unchanged.
         timedSpark.sparkContext.setJobDescription(name)
+        val startMs = System.currentTimeMillis()
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(timedSpark, sfDir)); true } catch {
@@ -136,6 +141,8 @@ object Bench {
         // listed by name in a separate "failed" array — no sentinel
         // for downstream consumers to special-case
         val dt = if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        val window = QueryCost.Window(name, startMs,
+          System.currentTimeMillis(), failed = !ok)
         // Queries persist() their reused sketch tables; dropping them
         // between queries keeps storage memory from starving later
         // queries' execution memory (isolated, stable numbers).
@@ -146,11 +153,11 @@ object Bench {
         timedSpark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
         timedSpark.sparkContext.setJobDescription(null)
-        name -> dt
+        (name, dt, window)
     }
-    val qs = results.collect { case (k, Some(v)) => "\"" + k + "\":" + v }
+    val qs = results.collect { case (k, Some(v), _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, None, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.flatMap(_._2).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
@@ -160,11 +167,19 @@ object Bench {
     // capture and the round-over-round comparison was lost — a file
     // the driver can read whole is cheap insurance. Never fatal: the
     // bench's job is the stdout line.
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_JSON", "/tmp/graft_bench_last.json")),
+    val sidecar = sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_JSON", "/tmp/graft_bench_last.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
+    // stop() drains the listener bus, so every event of the timed pass
+    // has reached `cost`. One JSON object per selected query goes next
+    // to the sidecar (x.json -> x.queries.jsonl); equally never fatal.
     timedSpark.stop()
+    try java.nio.file.Files.write(java.nio.file.Paths.get(
+        sidecar.stripSuffix(".json") + ".queries.jsonl"),
+      cost.report(results.map(_._3)).map(_.json + "\n").mkString
+        .getBytes("UTF-8"))
+    catch { case _: Throwable => () }
   }
 }

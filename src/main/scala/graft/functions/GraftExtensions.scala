@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
-import graft.functions.expressions.{AdcDistance, BitPack, BloomOrAgg, BoundedTopK, CharNgrams, CompressRatio, CosineSimilarity, DotProduct, HyperplaneBuckets, JaccardSim, JsonLongField, L2DistanceSq, LangId, LoadBytes, MinhashSignature, NgramHashes, PqCodes, RewriteHofDotProduct, SimHash32, SimHashBits, TextFeatures, TopItemShare, VectorGram, WordGramHashes, WordNgrams, WordShingles}
+import graft.functions.expressions.{AdcDistance, BitPack, BloomOrAgg, BoundedTopK, CharNgrams, CompressRatio, CosineSimilarity, DotProduct, HyperplaneBuckets, JaccardSim, JsonLongField, L2DistanceSq, LangId, LoadBytes, MinhashSignature, NgramHashes, PqCodes, RewriteHofDotProduct, SimHashBits, TextFeatures, TopItemShare, VectorGram, WordGramHashes, WordNgrams, WordShingles}
 import graft.operators.SerializableHadoopConf
 import graft.plans.HoistPayloadLoad
 
@@ -32,12 +32,6 @@ object GraftFunctions {
       { args: Seq[Expression] =>
         require(args.length == 2, "cosine_sim takes exactly 2 arguments")
         CosineSimilarity(args.head, args(1))
-      }),
-    (FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      { args: Seq[Expression] =>
-        require(args.length == 1, "simhash32 takes exactly 1 argument")
-        SimHash32(args.head)
       }),
     (FunctionIdentifier("adc_dist"),
       new ExpressionInfo(classOf[AdcDistance].getName, "adc_dist"),
@@ -287,12 +281,6 @@ object GraftFunctions {
     * sum — callers apply the r6 rounding; requires [[register]]. */
   def adcDist(lut: Column, codes: Column): Column =
     call_function("adc_dist", lut, codes)
-
-  /** Codegen'd 32-bit SimHash over pre-hashed features (see
-    * [[graft.functions.expressions.SimHash32]]); bit-identical to
-    * [[TextFunctions.simhashOfHashes]] at 32 bits. */
-  def simhash32(hashes: Column): Column =
-    call_function("simhash32", hashes)
 
   /** Fused MinHash signature over a shingle array (see
     * [[graft.functions.expressions.MinhashSignature]]); bit-identical

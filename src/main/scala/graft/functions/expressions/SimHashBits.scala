@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native SimHash over a pre-hashed feature array for ANY width up
-  * to 63 bits — the generalization of [[SimHash32]] that exists
-  * because LSH band capacity must scale with the corpus: band-key
+  * to 63 bits (32 included: one expression serves every width). The
+  * width is a parameter because LSH band capacity must scale with
+  * the corpus: band-key
   * space is 2^(bits/bands), so a 32-bit sketch with byte bands
   * saturates around 10⁵ documents (every band value holds thousands
   * of docs and the candidate mass grows quadratically); a 60-bit

@@ -191,7 +191,7 @@ object MaterializedAgg {
       // writer, vacuumed window, duplicate source keys — corruption
       // to refuse, never to commit), and THIS maintain's tombstone
       // count all fall out locally AND the gids in hand feed the
-      // view's upsert/delete below as pre-collected key hints (each
+      // view's upsert below as its key hint (`upsertKnownKeys`; it
       // skips its own distinct-collect job — round-9, guide §2 fixed
       // costs). An oversized delta falls back to the aggregate-only
       // job and unhinted mutations.
@@ -238,8 +238,8 @@ object MaterializedAgg {
       // jobs per maintain, and no crash window between stamp and
       // sweep at all). The n_rows=0 residue filter below still covers
       // views holding residue from older maintainers.
-      TableLog.upsert(spark, viewDir, newRows, "gid",
-        txn = Some(s"$App#$head"), knownKeys = gidHint,
+      TableLog.upsertKnownKeys(spark, viewDir, newRows, "gid", gidHint,
+        txn = Some(s"$App#$head"),
         dropBatchWhere =
           if (deadNow > 0) Some(col("n_rows") === 0L) else None)
       // post-state WITHOUT a job in the steady state: the live files'

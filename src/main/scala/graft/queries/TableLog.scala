@@ -1546,6 +1546,22 @@ object TableLog {
     }
   }
 
+  /** The key hint as sorted distinct keys when it can drive the pure
+    * IN-filter path (stats-keyed, long-kinded, integral key column,
+    * IN-sized); otherwise None and the mutation collects its keys. */
+  private def honoredHint(spark: SparkSession, dir: String, key: String,
+      knownKeys: Option[Array[Long]]): Option[BatchKeys] =
+    knownKeys.map { ks0 =>
+        val ks = ks0.distinct
+        java.util.Arrays.sort(ks)
+        BatchKeys(ks, exactLongs = true, strings = None)
+      }.filter(b => b.stats.nonEmpty &&
+        b.stats.length <= InFilterMaxKeys &&
+        statsKeyOf(spark, dir).contains(key) &&
+        statsKeyKindOf(spark, dir).contains("long") &&
+        inFilterValues(spark, dir, key, Some(b),
+          keyTypeOf(spark, dir, key)).isDefined)
+
   /** Copy-on-write MERGE: rows of `batch` replace same-`key` rows;
     * unmatched batch rows insert. Only files that CONTAIN a batch key
     * are rewritten; untouched files are carried by reference, never
@@ -1560,7 +1576,19 @@ object TableLog {
   def upsert(spark: SparkSession, dir: String, batch: DataFrame,
       key: String, allowSchemaEvolution: Boolean = false,
       maxRebases: Int = 2, txn: Option[String] = None,
-      knownKeys: Option[Array[Long]] = None,
+      dropBatchWhere: Option[org.apache.spark.sql.Column] = None)
+      : Unit =
+    upsertKnownKeys(spark, dir, batch, key, None, allowSchemaEvolution,
+      maxRebases, txn, dropBatchWhere)
+
+  /** [[upsert]] given the batch's distinct non-null keys, which saves
+    * the key-collect job (MaterializedAgg holds them already). A key
+    * missing from the hint keeps its old row beside the new one, so
+    * this entry is not public. */
+  private[queries] def upsertKnownKeys(spark: SparkSession, dir: String,
+      batch: DataFrame, key: String, knownKeys: Option[Array[Long]],
+      allowSchemaEvolution: Boolean = false, maxRebases: Int = 2,
+      txn: Option[String] = None,
       dropBatchWhere: Option[org.apache.spark.sql.Column] = None)
       : Unit = {
     val v = currentVersion(spark, dir) + 1
@@ -1636,24 +1664,7 @@ object TableLog {
     // leaves a non-evolved table paying harmless merge reads, never
     // an evolved table read without merging).
     val marksEvolution = allowSchemaEvolution && batchCols != tableCols
-    // PRE-COLLECTED KEY HINT (round-9): a caller that already holds
-    // this batch's distinct non-null key values — MaterializedAgg
-    // collects its delta frame for the divergence pre-check anyway —
-    // passes them here and the mutation skips its own key-collect
-    // job. Honored ONLY when the hint can drive the pure IN-filter
-    // path below (stats-keyed, long-kinded, integral key column,
-    // IN-sized); any other shape falls back to collecting, so the
-    // hint can never change semantics, only remove a job.
-    val hinted: Option[BatchKeys] = knownKeys.map { ks0 =>
-        val ks = ks0.distinct
-        java.util.Arrays.sort(ks)
-        BatchKeys(ks, exactLongs = true, strings = None)
-      }.filter(b => b.stats.nonEmpty &&
-        b.stats.length <= InFilterMaxKeys &&
-        statsKeyOf(spark, dir).contains(key) &&
-        statsKeyKindOf(spark, dir).contains("long") &&
-        inFilterValues(spark, dir, key, Some(b),
-          keyTypeOf(spark, dir, key)).isDefined)
+    val hinted = honoredHint(spark, dir, key, knownKeys)
     // persisted: consumed by up to three actions (sortedBatchKeys
     // collect, the touch-scan semi-join, the rewrite anti-join) —
     // without it each action re-shuffles the batch's distinct.
@@ -1782,23 +1793,18 @@ object TableLog {
     * time travel — until vacuumed. */
   def delete(spark: SparkSession, dir: String, keysDf: DataFrame,
       key: String, maxRebases: Int = 2,
-      txn: Option[String] = None,
-      knownKeys: Option[Array[Long]] = None): Unit = {
+      txn: Option[String] = None): Unit =
+    deleteKnownKeys(spark, dir, keysDf, key, None, maxRebases, txn)
+
+  /** [[delete]] given the keys; the contract of [[upsertKnownKeys]]. */
+  private[queries] def deleteKnownKeys(spark: SparkSession, dir: String,
+      keysDf: DataFrame, key: String, knownKeys: Option[Array[Long]],
+      maxRebases: Int = 2, txn: Option[String] = None): Unit = {
     val v = currentVersion(spark, dir) + 1
     require(v >= 1, s"TableLog: no base version in $dir")
     val liveStats = liveFileStats(spark, dir)
     val fs = fsOf(spark, dir)
-    // same pre-collected hint contract as upsert (see there)
-    val hinted: Option[BatchKeys] = knownKeys.map { ks0 =>
-        val ks = ks0.distinct
-        java.util.Arrays.sort(ks)
-        BatchKeys(ks, exactLongs = true, strings = None)
-      }.filter(b => b.stats.nonEmpty &&
-        b.stats.length <= InFilterMaxKeys &&
-        statsKeyOf(spark, dir).contains(key) &&
-        statsKeyKindOf(spark, dir).contains("long") &&
-        inFilterValues(spark, dir, key, Some(b),
-          keyTypeOf(spark, dir, key)).isDefined)
+    val hinted = honoredHint(spark, dir, key, knownKeys)
     val keys: Option[DataFrame] =
       if (hinted.isDefined) None
       else Some(keysDf.select(col(key)).distinct().persist())

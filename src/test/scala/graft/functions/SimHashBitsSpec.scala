@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.TextFunctions._
 
-class SimHash32Spec extends SparkSpec {
+class SimHashBitsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("native simhash32 is bit-identical to the composable formula") {
+  test("simhash_bits at 32 is bit-identical to the composable formula") {
     GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val docs = Seq.fill(100)(
@@ -16,11 +16,11 @@ class SimHash32Spec extends SparkSpec {
       .withColumn("hs", simhashHashes(tokens(col("t"))))
     val r = df.select(
       simhashOfHashes(col("hs"), 32).as("hof"),
-      GraftFunctions.simhash32(col("hs")).as("native")).collect()
+      GraftFunctions.simhashBits(col("hs"), 32).as("native")).collect()
     r.foreach(row => assert(row.getLong(0) == row.getLong(1)))
   }
 
-  test("native simhash_bits at 60 is bit-identical to the composable formula") {
+  test("simhash_bits at 60 is bit-identical to the composable formula") {
     GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     val docs = Seq.fill(80)(
@@ -33,12 +33,12 @@ class SimHash32Spec extends SparkSpec {
     r.foreach(row => assert(row.getLong(0) == row.getLong(1)))
   }
 
-  test("empty and null inputs") {
+  test("simhash_bits at 32: empty and null inputs") {
     GraftFunctions.register(spark)
     val df = Seq(
       (1, Some(Seq.empty[Long])),
       (2, None)).toDF("id", "hs")
-    val r = df.select(col("id"), GraftFunctions.simhash32(col("hs")))
+    val r = df.select(col("id"), GraftFunctions.simhashBits(col("hs"), 32))
       .collect().map(x => x.getInt(0) -> (if (x.isNullAt(1)) None
         else Some(x.getLong(1)))).toMap
     assert(r(1).contains(0L)) // no features → all-zero sketch

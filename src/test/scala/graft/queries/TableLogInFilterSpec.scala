@@ -164,14 +164,14 @@ class TableLogInFilterSpec extends SparkSpec with Matchers {
       statsKey = Some("id"))
     val batch = Seq((7L, "updated 7"), (444L, "updated 444"),
       (9001L, "fresh")).toDF("id", "body")
-    TableLog.upsert(spark, hinted, batch, "id",
-      knownKeys = Some(Array(7L, 444L, 9001L)))
+    TableLog.upsertKnownKeys(spark, hinted, batch, "id",
+      Some(Array(7L, 444L, 9001L)))
     TableLog.upsert(spark, plain, batch, "id")
     content(hinted) shouldBe content(plain)
 
     val doomed = Seq(7L, 100L).toDF("id")
-    TableLog.delete(spark, hinted, doomed, "id",
-      knownKeys = Some(Array(100L, 7L, 7L)))
+    TableLog.deleteKnownKeys(spark, hinted, doomed, "id",
+      Some(Array(100L, 7L, 7L)))
     TableLog.delete(spark, plain, doomed, "id")
     val got = content(hinted)
     got shouldBe content(plain)
