@@ -574,6 +574,23 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
     got.filter(col("id") === 1900L).select("body")
       .head.getString(0) shouldBe "w2"
 
+    // a DELETE racing an upsert on disjoint range files: the delete
+    // rewrites id 20's file, the upsert id 1950's — both land
+    val fd = Future(TableLog.delete(spark, dir,
+      Seq(20L).toDF("id"), "id", maxRebases = 4))
+    val fu = Future(TableLog.upsert(spark, dir,
+      Seq((1950L, "w3")).toDF("id", "body"), "id", maxRebases = 4))
+    Await.result(fd, 120.seconds)
+    Await.result(fu, 120.seconds)
+    TableLog.currentVersion(spark, dir) shouldBe 4
+    val afterDelete = TableLog.readVersion(spark, dir)
+    afterDelete.count() shouldBe 1999
+    afterDelete.filter(col("id") === 20L).count() shouldBe 0
+    afterDelete.filter(col("id") === 1950L).select("body")
+      .head.getString(0) shouldBe "w3"
+    afterDelete.filter(col("id") === 10L).select("body")
+      .head.getString(0) shouldBe "w1"
+
     // concurrent appendOnce from two different apps: pure adds never
     // conflict — both land exactly once
     val fa = Future(TableLog.appendOnce(spark, dir,
@@ -582,7 +599,7 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
       Seq((40000L, "b")).toDF("id", "body"), "appB", 0L))
     Await.result(fa, 120.seconds)
     Await.result(fb, 120.seconds)
-    TableLog.currentVersion(spark, dir) shouldBe 4
-    TableLog.readVersion(spark, dir).count() shouldBe 2002
+    TableLog.currentVersion(spark, dir) shouldBe 6
+    TableLog.readVersion(spark, dir).count() shouldBe 2001
   }
 }
