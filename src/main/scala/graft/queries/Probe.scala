@@ -207,24 +207,35 @@ object Probe {
   /** Log metadata as a table accrues 10 to 10⁴ commits of synthetic
     * one-file add/remove manifests, checkpointed every 16 (a steady
     * micro-batch table after compaction): snapshot resolution, replay
-    * cost and vacuum must stay flat in the version count. */
+    * cost and vacuum must stay flat in the version count. The build
+    * also reports its summed commit and checkpoint seconds, which
+    * split its growth between the two steps. */
   private def tableLogMeta(spark: SparkSession): Unit = {
     import spark.implicits._
     Seq(10, 100, 1000, 10000).foreach { n =>
       withTempDir(spark, "graft-probe-tlmeta") { dir =>
         val at = "versions" -> n.toLong
         def rel(v: Int) = f"data/v$v%05d-synth/part-0.parquet"
+        var commitNs, checkpointNs = 0L
+        def timed(body: => Unit): Long = {
+          val t0 = System.nanoTime()
+          body
+          System.nanoTime() - t0
+        }
         time("tablelog-meta", "build_s", 1, at) {
           TableLog.writeBase(spark, Seq((0L, "base")).toDF("id", "body"),
             dir)
           (1 to n).foreach { v =>
-            TableLog.commit(spark, dir, v,
+            commitNs += timed(TableLog.commit(spark, dir, v,
               adds = Seq(TableLog.AddEntry(rel(v), Some((v.toLong, v.toLong)))),
               removes = Option.when(v > 1)(rel(v - 1)).toSeq,
-              txn = Some(s"probe#$v"))
-            if (v % 16 == 0) TableLog.checkpoint(spark, dir)
+              txn = Some(s"probe#$v")))
+            if (v % 16 == 0)
+              checkpointNs += timed(TableLog.checkpoint(spark, dir))
           }
         }
+        report("tablelog-meta", "commit_s", commitNs / 1e9, at)
+        report("tablelog-meta", "checkpoint_s", checkpointNs / 1e9, at)
         time("tablelog-meta", "current_version_s", 20, at)(
           TableLog.currentVersion(spark, dir))
         time("tablelog-meta", "live_file_stats_s", 20, at)(

@@ -27,8 +27,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
   *
   * BOUNDED LOG METADATA: `_log/_last_checkpoint` points at the
   * newest manifest CHECKPOINT (full live-set + per-app txn
-  * high-water state in one file, format 2). Every metadata path is
-  * then bounded by COMMITS-SINCE-CHECKPOINT, never table age:
+  * high-water state in one file). Checkpoints are format 2 only: the
+  * file begins with `format\t2`, and any other checkpoint is refused
+  * by name. Every metadata path is then bounded by
+  * COMMITS-SINCE-CHECKPOINT, never table age:
   * [[currentVersion]] reads the pointer and probes forward instead
   * of listing `_log`; snapshot replay starts at the checkpoint;
   * [[appendOnce]]'s idempotence check stops at the checkpoint's txn
@@ -253,10 +255,7 @@ object TableLog {
       s"TableLog: version $v already committed (concurrent writer?)")
     val body = (txn.map("txn\t" + _).toSeq ++
       removes.map("remove\t" + _) ++
-      adds.map {
-        case AddEntry(rel, Some((lo, hi))) => s"add\t$rel\t$lo\t$hi"
-        case AddEntry(rel, None) => s"add\t$rel"
-      }).mkString("", "\n", "\n")
+      adds.map(addLine)).mkString("", "\n", "\n")
     require(writeSmallFileAtomic(fs, p, body, overwrite = false),
       s"TableLog: version $v already committed (lost the commit race)")
   }
@@ -266,10 +265,10 @@ object TableLog {
     * ids are monotonic per app, so that one stamp decides (>= ours ⇒
     * ours already landed). A steady-state streaming sink therefore
     * reads ONE manifest per check (its own previous batch), not the
-    * whole log. The scan floor is the newest checkpoint: format-2
-    * checkpoints fold every app's high-water mark into their `txn`
-    * lines, so an app's very first append on an old table reads
-    * checkpoint + manifests-since instead of the whole history (and
+    * whole log. The scan floor is the newest checkpoint: checkpoints
+    * fold every app's high-water mark into their `txn` lines, so an
+    * app's very first append on an old table reads checkpoint +
+    * manifests-since instead of the whole history (and
     * manifests below the checkpoint may have been truncated by
     * [[vacuum]] anyway). */
   private def txnCommitted(spark: SparkSession, dir: String,
@@ -288,42 +287,21 @@ object TableLog {
     if (latest < 0) return None
     val fs = fsOf(spark, dir)
     val cp = baseCheckpointFor(fs, dir, latest)
-    val floor = cp.getOrElse(-1)
-    var v = latest
-    while (v > floor) {
-      manifestLines(fs, dir, v).foreach {
-        case ("txn", values) =>
-          val id = values.head
-          val cut = id.lastIndexOf('#')
-          if (cut > 0 && id.substring(0, cut) == appId)
-            return Some(id.substring(cut + 1).toLong)
-        case _ => ()
-      }
-      v -= 1
-    }
-    cp match {
-      case Some(c) =>
-        val st = parseCheckpoint(fs, checkpointPath(dir, c))
-        if (st.isV2) st.txns.get(appId)
-        else {
-          // legacy (format-1) checkpoint: no txn state folded in —
-          // keep scanning the manifests below it, as before
-          var w = c
-          while (w >= 0) {
-            manifestLines(fs, dir, w).foreach {
-              case ("txn", values) =>
-                val id = values.head
-                val cut = id.lastIndexOf('#')
-                if (cut > 0 && id.substring(0, cut) == appId)
-                  return Some(id.substring(cut + 1).toLong)
-              case _ => ()
-            }
-            w -= 1
-          }
-          None
-        }
-      case None => None
-    }
+    // lazily, newest first: the manifests above the checkpoint, then
+    // the checkpoint's own txn lines
+    ((latest until cp.getOrElse(-1) by -1).iterator
+      .map(v => manifestLines(fs, dir, v)) ++
+      cp.iterator.map(c => checkpointLines(fs, checkpointPath(dir, c))))
+      .flatMap(_.iterator.collect { case ("txn", Seq(id)) => parseTxn(id) }
+        .collectFirst { case Some((app, b)) if app == appId => b })
+      .nextOption()
+  }
+
+  /** A txn id `app#batch` as (app, batch); None without an app part. */
+  private def parseTxn(id: String): Option[(String, Long)] = {
+    val cut = id.lastIndexOf('#')
+    if (cut > 0) Some((id.substring(0, cut), id.substring(cut + 1).toLong))
+    else None
   }
 
   private def manifestLines(fs: FileSystem, dir: String, v: Int)
@@ -332,37 +310,30 @@ object TableLog {
     require(fs.exists(p), s"TableLog: missing manifest v$v — either a " +
       "corrupt log, or a version below the truncation point (vacuum " +
       "truncates manifests no retained version replays)")
-    readSmallFile(fs, p).split('\n').filter(_.nonEmpty).toSeq.map { line =>
+    logLines(readSmallFile(fs, p))
+  }
+
+  /** A checkpoint's add and txn lines — manifest syntax after its
+    * `format\t2` header. Format 2 is the only one [[checkpoint]]
+    * writes; a file without that header is refused, naming it. */
+  private def checkpointLines(fs: FileSystem, p: Path)
+      : Seq[(String, Seq[String])] = {
+    val lines = logLines(readSmallFile(fs, p))
+    require(lines.headOption.contains(("format", Seq("2"))),
+      s"TableLog: checkpoint $p has no format-2 header — only format-2 " +
+        "checkpoints are read")
+    lines.tail
+  }
+
+  private def logLines(body: String): Seq[(String, Seq[String])] =
+    body.split('\n').filter(_.nonEmpty).toSeq.map { line =>
       val parts = line.split('\t').toSeq
       (parts.head, parts.tail)
     }
-  }
 
-  /** Parsed checkpoint state: the live add-set at its version, the
-    * per-app txn high-water marks (format 2), and the format flag
-    * (format-1 files carry add lines only). */
-  private final case class CpState(isV2: Boolean, adds: Seq[AddEntry],
-      txns: Map[String, Long])
-
-  private def parseCheckpoint(fs: FileSystem, p: Path): CpState = {
-    var isV2 = false
-    val adds = Seq.newBuilder[AddEntry]
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    readSmallFile(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
-      line.split('\t').toSeq match {
-        case Seq("format", v) => isV2 = v.toInt >= 2
-        case Seq("add", rel) => adds += AddEntry(rel, None)
-        case Seq("add", rel, lo, hi) =>
-          adds += AddEntry(rel, Some((lo.toLong, hi.toLong)))
-        case Seq("txn", id) =>
-          val cut = id.lastIndexOf('#')
-          require(cut > 0, s"TableLog: bad checkpoint txn line $id")
-          txns(id.substring(0, cut)) = id.substring(cut + 1).toLong
-        case other => throw new IllegalArgumentException(
-          s"TableLog: bad checkpoint line $other")
-      }
-    }
-    CpState(isV2, adds.result(), txns.toMap)
+  private def addLine(e: AddEntry): String = e.keyRange match {
+    case Some((lo, hi)) => s"add\t${e.rel}\t$lo\t$hi"
+    case None => s"add\t${e.rel}"
   }
 
   /** The replay base for a read at `upTo`: the pointer's checkpoint
@@ -385,7 +356,7 @@ object TableLog {
     * reader stalled across two whole checkpoint intervals can race
     * the cleanup; the retry re-resolves from the fresh pointer). */
   private final case class Replayed(adds: Seq[AddEntry],
-      txns: Map[String, Long], base: Option[(Int, Boolean)])
+      txns: Map[String, Long])
 
   private def replayState(spark: SparkSession, dir: String,
       upTo: Int): Replayed = {
@@ -394,37 +365,27 @@ object TableLog {
       val live =
         new scala.collection.mutable.LinkedHashMap[String, AddEntry]()
       val txns = scala.collection.mutable.Map.empty[String, Long]
-      var base: Option[(Int, Boolean)] = None
+      def replay(v: Int): ((String, Seq[String])) => Unit = {
+        case ("add", Seq(rel)) => live += rel -> AddEntry(rel, None)
+        case ("add", Seq(rel, lo, hi)) =>
+          live += rel -> AddEntry(rel, Some((lo.toLong, hi.toLong)))
+        case ("remove", Seq(rel)) =>
+          require(live.remove(rel).isDefined,
+            s"TableLog: v$v removes unknown file $rel")
+        case ("txn", Seq(id)) => parseTxn(id).foreach { case (app, b) =>
+            if (txns.get(app).forall(_ < b)) txns(app) = b
+          }
+        case (other, _) => throw new IllegalArgumentException(
+          s"TableLog: bad log action $other at v$v")
+      }
       val from = baseCheckpointFor(fs, dir, upTo) match {
         case Some(c) =>
-          val st = parseCheckpoint(fs, checkpointPath(dir, c))
-          st.adds.foreach(e => live += e.rel -> e)
-          txns ++= st.txns
-          base = Some((c, st.isV2))
+          checkpointLines(fs, checkpointPath(dir, c)).foreach(replay(c))
           c + 1
         case None => 0
       }
-      (from to upTo).foreach { v =>
-        manifestLines(fs, dir, v).foreach {
-          case ("add", Seq(rel)) => live += rel -> AddEntry(rel, None)
-          case ("add", Seq(rel, lo, hi)) =>
-            live += rel -> AddEntry(rel, Some((lo.toLong, hi.toLong)))
-          case ("remove", Seq(rel)) =>
-            require(live.remove(rel).isDefined,
-              s"TableLog: v$v removes unknown file $rel")
-          case ("txn", Seq(id)) =>
-            val cut = id.lastIndexOf('#')
-            if (cut > 0) {
-              val app = id.substring(0, cut)
-              val b = id.substring(cut + 1).toLong
-              if (txns.get(app).forall(_ < b)) txns(app) = b
-            }
-          case (other, _) =>
-            throw new IllegalArgumentException(
-              s"TableLog: bad manifest action $other")
-        }
-      }
-      Replayed(live.values.toSeq, txns.toMap, base)
+      (from to upTo).foreach(v => manifestLines(fs, dir, v).foreach(replay(v)))
+      Replayed(live.values.toSeq, txns.toMap)
     }
     try attempt()
     catch { case _: java.io.FileNotFoundException => attempt() }
@@ -458,37 +419,9 @@ object TableLog {
       // wrong snapshot, and a leaked remove-line prefix breaks later
       // replays)
       val st = replayState(spark, dir, v)
-      val adds = st.adds
-      // a LEGACY (format-1) base carries no txn lines, so the state
-      // replayed above misses stamps recorded at or below it — the
-      // first format-2 checkpoint on an upgraded table must back-fill
-      // them from the old manifests (still present: truncation
-      // requires a format-2 base), or exactly-once breaks for any app
-      // whose last append predates the legacy checkpoint
-      val txns = scala.collection.mutable.Map.empty[String, Long] ++ st.txns
-      st.base match {
-        case Some((b, false)) =>
-          (0 to b).foreach { w =>
-            manifestLines(fs, dir, w).foreach {
-              case ("txn", values) =>
-                val id = values.head
-                val cut = id.lastIndexOf('#')
-                if (cut > 0) {
-                  val app = id.substring(0, cut)
-                  val bid = id.substring(cut + 1).toLong
-                  if (txns.get(app).forall(_ < bid)) txns(app) = bid
-                }
-              case _ => ()
-            }
-          }
-        case _ => ()
-      }
       val body = ("format\t2" +:
-        (txns.toSeq.sortBy(_._1).map { case (app, b) => s"txn\t$app#$b" } ++
-          adds.map {
-            case AddEntry(rel, Some((lo, hi))) => s"add\t$rel\t$lo\t$hi"
-            case AddEntry(rel, None) => s"add\t$rel"
-          })).mkString("", "\n", "\n")
+        (st.txns.toSeq.sortBy(_._1).map { case (app, b) => s"txn\t$app#$b" } ++
+          st.adds.map(addLine))).mkString("", "\n", "\n")
       require(writeSmallFileAtomic(fs, p, body, overwrite = false),
         s"TableLog: failed to write checkpoint at v$v")
     }
@@ -655,10 +588,10 @@ object TableLog {
   }
 
   /** Key-count ceiling for the IN-filter fast path of the keyed
-    * touch-scans: below it, the batch's already-collected key values
-    * replace the semi/anti BROADCAST JOINS with a typed
-    * `isInCollection` filter — no broadcast-build job per join, and
-    * the predicate reaches the parquet scan (row-group stats can
+    * touch-scans ([[keyMembers]]): below it, the batch's
+    * already-collected key values replace the semi/anti BROADCAST
+    * JOINS with a typed IN filter — no broadcast-build job per join,
+    * and the predicate reaches the parquet scan (row-group stats can
     * skip within the candidate files). Above it, the literal list
     * riding every task closure would outgrow the broadcast it
     * replaces (the join ships the keys once per executor), so the
@@ -721,6 +654,24 @@ object TableLog {
           batchKeys.flatMap(_.strings).map(_.toSeq)
         else None
       case _ => None
+    }
+
+  /** Rows of `df` whose `key` is among the batch keys (`anti`: is
+    * not). The ONE place that chooses between the typed IN filter —
+    * when `inVals` holds the batch's values ([[inFilterValues]]) — and
+    * a broadcast semi/anti join against the distinct `keys` frame,
+    * which is only evaluated on the join path. Join semantics are
+    * mirrored exactly: a NULL key matches nothing (semi: In is null →
+    * filtered; anti: kept via the explicit isNull arm). */
+  private def keyMembers(df: DataFrame, key: String,
+      inVals: Option[Seq[Any]], keys: => DataFrame,
+      anti: Boolean): DataFrame =
+    inVals match {
+      case Some(vs) =>
+        val in = col(key).isInCollection(vs)
+        df.filter(if (anti) col(key).isNull || !in else in)
+      case None => df.join(broadcast(keys), Seq(key),
+        if (anti) "left_anti" else "left_semi")
     }
 
   /** The key column's declared type from the LOGGED schema — None on
@@ -800,15 +751,13 @@ object TableLog {
       if (ks.limit(1).isEmpty) return emptySnapshot(spark, dir, version)
       val (sks, cand) = pruneCandidates(spark, dir, ks, key, liveStats)
       if (cand.isEmpty) emptySnapshot(spark, dir, version)
-      else inFilterValues(spark, dir, key, sks,
-          keyTypeOf(spark, dir, key)) match {
-        // same IN-filter fast path as the write-side touch-scans:
-        // the residual membership test pushes into the pruned scan
-        // instead of building a broadcast join
-        case Some(vs) => readLive(spark, dir, cand)
-          .filter(col(key).isInCollection(vs))
-        case None => readLive(spark, dir, cand)
-          .join(broadcast(ks), Seq(key), "left_semi")
+      else {
+        // same IN-filter fast path as the MERGE touch-scan: the
+        // residual membership test pushes into the pruned scan
+        val inVals = inFilterValues(spark, dir, key, sks,
+          keyTypeOf(spark, dir, key))
+        keyMembers(readLive(spark, dir, cand), key, inVals, ks,
+          anti = false)
       }
     } finally if (statsKeyed) ks.unpersist(blocking = false)
   }
@@ -1528,9 +1477,7 @@ object TableLog {
               case ("add", vs) if keyed =>
                 val overlap = (batchKeys, vs) match {
                   case (Some(ks), Seq(_, lo, hi)) =>
-                    val i = java.util.Arrays.binarySearch(ks, lo.toLong)
-                    val at = if (i >= 0) i else -i - 1
-                    at < ks.length && ks(at) <= hi.toLong
+                    anyKeyIn(ks, lo.toLong, hi.toLong)
                   case _ => true // no stats either side: not provable
                 }
                 require(!overlap,
@@ -1556,9 +1503,7 @@ object TableLog {
         java.util.Arrays.sort(ks)
         BatchKeys(ks, exactLongs = true, strings = None)
       }.filter(b => b.stats.nonEmpty &&
-        b.stats.length <= InFilterMaxKeys &&
         statsKeyOf(spark, dir).contains(key) &&
-        statsKeyKindOf(spark, dir).contains("long") &&
         inFilterValues(spark, dir, key, Some(b),
           keyTypeOf(spark, dir, key)).isDefined)
 
@@ -1664,192 +1609,143 @@ object TableLog {
     // leaves a non-evolved table paying harmless merge reads, never
     // an evolved table read without merging).
     val marksEvolution = allowSchemaEvolution && batchCols != tableCols
-    val hinted = honoredHint(spark, dir, key, knownKeys)
-    // persisted: consumed by up to three actions (sortedBatchKeys
-    // collect, the touch-scan semi-join, the rewrite anti-join) —
-    // without it each action re-shuffles the batch's distinct.
-    // Skipped entirely under an honored hint (the IN path never
-    // evaluates a keys frame).
-    val keys: Option[DataFrame] =
-      if (hinted.isDefined) None
-      else Some(batch.select(col(key)).distinct().persist())
-    try {
-    // stage 1: manifest-stats pruning — per-KEY precision (a file
-    // survives iff some batch key falls inside its [lo, hi]; binary
-    // search per file over the sorted batch keys), so a batch
-    // touching the table's two ends doesn't admit everything between
-    val (sortedKeys, candidates) = hinted match {
-      case Some(b) =>
-        (Some(b), statsSurvivors(liveStats, Some(b.stats)).map(_.rel))
-      case None => pruneCandidates(spark, dir, keys.get, key, liveStats)
-    }
-    // IN-FILTER fast path: stage 1 already collected this batch's
-    // keys for stats pruning — membership against the candidate rows
-    // reuses them as a typed pushed predicate instead of building
-    // TWO broadcast joins (semi for touched files, anti for the
-    // rewrite). Join semantics are mirrored exactly: a NULL key
-    // matches nothing (semi: In is null → filtered; anti: kept via
-    // the explicit isNull arm). Falls back to the joins for
-    // oversized batches, non-stats keys, and lossily-cast key
-    // frames; string stats kinds ride the exact collected strings.
-    val inVals = inFilterValues(spark, dir, key, sortedKeys,
-      keyTypeOf(spark, dir, key))
-    // dir-relative path by the scan's own URI rendering (the
-    // compactFiles file-name-encoding lesson)
-    val uriOf = candidates.map { rel =>
-      fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
-    }.toMap
-    // stage 2: the column-pruned touch-scan over the candidates only.
-    // readLive, NOT a plain read: on an evolved table whose merge key
-    // arrived BY evolution, single-footer inference may pick a file
-    // lacking the key column — an AnalysisException on one run,
-    // a silently empty semi-join on another (review-caught)
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val scanned = readLive(spark, dir, candidates)
-          .withColumn("_graft_file", input_file_name())
-        (inVals match {
-          case Some(vs) => scanned.filter(col(key).isInCollection(vs))
-          case None => scanned.join(broadcast(keys.get), Seq(key),
-            "left_semi")
-        })
-          .select(col("_graft_file")).distinct()
-          .collect().map(_.getString(0)).toSeq
-          .map(u => uriOf.getOrElse(u,
-            throw new IllegalStateException(
-              s"TableLog: scan file $u not in the live set")))
+    mergeCore(spark, dir, batch, key, honoredHint(spark, dir, key, knownKeys),
+        liveStats) { touched =>
+      // allowMissingColumns only under the evolution opt-in: a batch
+      // may then carry NEW columns (old rows null-fill them) or omit
+      // existing ones (replaced rows null-fill — REPLACE semantics);
+      // strict mode already proved the column sets equal above
+      // MERGE-WITH-DELETE arm (round-9): a batch row matching
+      // `dropBatchWhere` marks its key for REMOVAL — the key still
+      // drives the touch-scan and the anti filter (resident rows with
+      // that key leave the rewrite), but no replacement row lands, all
+      // inside the ONE stamped commit. MaterializedAgg's tombstone
+      // sweep rides this instead of a commit-then-sweep version pair.
+      val batchRows = dropBatchWhere match {
+        case Some(p) => batch.filter(!coalesce(p, lit(false)))
+        case None => batch
       }
-    // allowMissingColumns only under the evolution opt-in: a batch
-    // may then carry NEW columns (old rows null-fill them) or omit
-    // existing ones (replaced rows null-fill — REPLACE semantics);
-    // strict mode already proved the column sets equal above
-    // MERGE-WITH-DELETE arm (round-9): a batch row matching
-    // `dropBatchWhere` marks its key for REMOVAL — the key still
-    // drives the touch-scan and the anti filter above (resident rows
-    // with that key leave the rewrite), but no replacement row lands,
-    // all inside the ONE stamped commit. MaterializedAgg's tombstone
-    // sweep rides this instead of a commit-then-sweep version pair.
-    val batchRows = dropBatchWhere match {
-      case Some(p) => batch.filter(!coalesce(p, lit(false)))
-      case None => batch
+      val rewritten = touched.survivors.fold(batchRows)(
+        _.unionByName(batchRows, allowMissingColumns = allowSchemaEvolution))
+      // CHECK constraints gate what gets WRITTEN — rewritten rows
+      // include evolution's null-fills, so a constraint on an omitted
+      // column correctly refuses the write (NULL evaluations violate:
+      // strict mode, the data-quality reading). The frame persists
+      // across the validation collect and the data write, or the
+      // touched-file read + anti filter would run twice.
+      val cs = constraintsOf(spark, dir)
+      val toWrite = if (cs.nonEmpty) rewritten.persist() else rewritten
+      try {
+        validateConstraints(spark, toWrite, cs, dir, "MERGE")
+        if (marksEvolution)
+          require(writeSmallFileAtomic(fs,
+            new Path(logDir(dir), "_evolved"), "1", overwrite = true),
+            "TableLog: failed to mark schema evolution")
+        commitRebased(spark, dir, v,
+          writeData(spark, sizeForWrite(spark, toWrite), dir, v),
+          touched.files, keyed = true, touched.sortedKeys, txn, maxRebases)
+        // widen the logged schema to the union AFTER the commit landed
+        // — the remembered shape must track every evolution, but an
+        // ABORTED upsert must never persist phantom columns that no
+        // committed file carries (a crash between commit and widen
+        // only loses the reminder; the files themselves still
+        // merge-read with the true schema, and the next evolving
+        // upsert re-records it)
+        if (marksEvolution)
+          writeLoggedSchema(fs, dir, StructType(tableSchema.fields ++
+            batch.schema.fields.filterNot(f =>
+              tableCols.contains(norm(f.name)))))
+      } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
     }
-    val rewritten =
-      if (touched.isEmpty) batchRows
-      else {
-        val live = readLive(spark, dir, touched)
-        (inVals match {
-          case Some(vs) => live.filter(col(key).isNull ||
-            !col(key).isInCollection(vs))
-          case None => live.join(broadcast(keys.get), Seq(key),
-            "left_anti")
-        }).unionByName(batchRows,
-          allowMissingColumns = allowSchemaEvolution)
-      }
-    // CHECK constraints gate what gets WRITTEN — rewritten rows
-    // include evolution's null-fills, so a constraint on an omitted
-    // column correctly refuses the write (NULL evaluations violate:
-    // strict mode, the data-quality reading). The frame persists
-    // across the validation collect and the data write, or the
-    // touched-file read + anti-join would run twice.
-    val cs = constraintsOf(spark, dir)
-    val toWrite = if (cs.nonEmpty) rewritten.persist() else rewritten
-    try {
-      validateConstraints(spark, toWrite, cs, dir, "MERGE")
-      if (marksEvolution)
-        require(writeSmallFileAtomic(fs,
-          new Path(logDir(dir), "_evolved"), "1", overwrite = true),
-          "TableLog: failed to mark schema evolution")
-      // rebase disjointness is proved against winner add-line stats,
-      // which are ALWAYS in the table's statsKey space — sortedKeys
-      // is already None for a merge keyed on any other column (a
-      // batch of ts values must never "prove" disjointness from
-      // doc_id ranges)
-      val rebaseKeys = sortedKeys.map(_.stats)
-      commitRebased(spark, dir, v,
-        writeData(spark, sizeForWrite(spark, toWrite), dir, v),
-        touched, keyed = true, rebaseKeys, txn, maxRebases)
-      // widen the logged schema to the union AFTER the commit landed
-      // — the remembered shape must track every evolution, but an
-      // ABORTED upsert must never persist phantom columns that no
-      // committed file carries (a crash between commit and widen
-      // only loses the reminder; the files themselves still
-      // merge-read with the true schema, and the next evolving
-      // upsert re-records it)
-      if (marksEvolution)
-        writeLoggedSchema(fs, dir, StructType(tableSchema.fields ++
-          batch.schema.fields.filterNot(f =>
-            tableCols.contains(norm(f.name)))))
-    } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
-    } finally keys.foreach(_.unpersist(blocking = false))
   }
 
   /** MERGE's delete arm: rows whose `key` appears in `keys` are
     * REMOVED from the table (decontamination hits, takedowns). Same
-    * COW shape as [[upsert]]: the stats-pruned touch-scan finds the
+    * COW core as [[upsert]]: the stats-pruned touch-scan finds the
     * files that contain a doomed key, ONLY those are rewritten
-    * (anti-joined against the keys), untouched files carry by
-    * reference, and prior versions still read the deleted rows —
-    * time travel — until vacuumed. */
+    * (without the keys), untouched files carry by reference, and
+    * prior versions still read the deleted rows — time travel —
+    * until vacuumed. */
   def delete(spark: SparkSession, dir: String, keysDf: DataFrame,
       key: String, maxRebases: Int = 2,
-      txn: Option[String] = None): Unit =
-    deleteKnownKeys(spark, dir, keysDf, key, None, maxRebases, txn)
-
-  /** [[delete]] given the keys; the contract of [[upsertKnownKeys]]. */
-  private[queries] def deleteKnownKeys(spark: SparkSession, dir: String,
-      keysDf: DataFrame, key: String, knownKeys: Option[Array[Long]],
-      maxRebases: Int = 2, txn: Option[String] = None): Unit = {
+      txn: Option[String] = None): Unit = {
     val v = currentVersion(spark, dir) + 1
     require(v >= 1, s"TableLog: no base version in $dir")
-    val liveStats = liveFileStats(spark, dir)
+    mergeCore(spark, dir, keysDf, key, None, liveFileStats(spark, dir)) { t =>
+      // nothing touched: nothing contains a doomed key, no commit
+      t.survivors.foreach { survivors =>
+        commitRebased(spark, dir, v,
+          writeData(spark, sizeForWrite(spark, survivors), dir, v),
+          t.files, keyed = true, t.sortedKeys, txn, maxRebases)
+      }
+    }
+  }
+
+  /** What the MERGE core's touch-scan found. `files`: the live files
+    * holding a batch key — the ones the commit removes. `sortedKeys`:
+    * the batch's sorted stats-space keys for the rebase's disjointness
+    * proof ([[commitRebased]]). Winner add-line stats are ALWAYS in
+    * the table's statsKey space, so this is None for a merge keyed on
+    * any other column (a batch of ts values must never "prove"
+    * disjointness from doc_id ranges). `survivors`: the touched files'
+    * rows without the batch keys; None when nothing was touched. */
+  private final case class Touched(files: Seq[String],
+      sortedKeys: Option[Array[Long]], survivors: Option[DataFrame])
+
+  /** The copy-on-write MERGE core of [[upsert]] and [[delete]]: persist
+    * the batch's distinct keys, prune the candidates, touch-scan them,
+    * hand `body` what the scan found, and unpersist the keys after
+    * it. `hinted` (an honored key hint) replaces the keys frame: its
+    * IN path never evaluates one. */
+  private def mergeCore[A](spark: SparkSession, dir: String,
+      keysDf: DataFrame, key: String, hinted: Option[BatchKeys],
+      liveStats: Seq[AddEntry])(body: Touched => A): A = {
     val fs = fsOf(spark, dir)
-    val hinted = honoredHint(spark, dir, key, knownKeys)
+    // persisted: consumed by up to three actions (sortedBatchKeys
+    // collect, the touch-scan semi-join, the rewrite anti-join) —
+    // without it each action re-shuffles the batch's distinct
     val keys: Option[DataFrame] =
       if (hinted.isDefined) None
       else Some(keysDf.select(col(key)).distinct().persist())
     try {
-    val (sortedKeys, candidates) = hinted match {
-      case Some(b) =>
-        (Some(b), statsSurvivors(liveStats, Some(b.stats)).map(_.rel))
-      case None => pruneCandidates(spark, dir, keys.get, key, liveStats)
-    }
-    // same IN-filter fast path as upsert (see there for semantics)
-    val inVals = inFilterValues(spark, dir, key, sortedKeys,
-      keyTypeOf(spark, dir, key))
-    val uriOf = candidates.map { rel =>
-      fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
-    }.toMap
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val scanned = readLive(spark, dir, candidates)
-          .withColumn("_graft_file", input_file_name())
-        (inVals match {
-          case Some(vs) => scanned.filter(col(key).isInCollection(vs))
-          case None => scanned.join(broadcast(keys.get), Seq(key),
-            "left_semi")
-        })
+      // stage 1: manifest-stats pruning — per-KEY precision (a file
+      // survives iff some batch key falls inside its [lo, hi]; binary
+      // search per file over the sorted batch keys), so a batch
+      // touching the table's two ends doesn't admit everything between
+      val (sortedKeys, candidates) = hinted match {
+        case Some(b) =>
+          (Some(b), statsSurvivors(liveStats, Some(b.stats)).map(_.rel))
+        case None => pruneCandidates(spark, dir, keys.get, key, liveStats)
+      }
+      // stage 1 already collected the batch's keys for stats pruning:
+      // membership reuses them as a typed pushed IN filter when they
+      // qualify (see keyMembers)
+      val inVals = inFilterValues(spark, dir, key, sortedKeys,
+        keyTypeOf(spark, dir, key))
+      def members(df: DataFrame, anti: Boolean) =
+        keyMembers(df, key, inVals, keys.get, anti)
+      // dir-relative path by the scan's own URI rendering (the
+      // compactFiles file-name-encoding lesson)
+      val uriOf = candidates.map { rel =>
+        fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
+      }.toMap
+      // stage 2: the column-pruned touch-scan over the candidates only.
+      // readLive, NOT a plain read: on an evolved table whose merge key
+      // arrived BY evolution, single-footer inference may pick a file
+      // lacking the key column — an AnalysisException on one run,
+      // a silently empty semi-join on another (review-caught)
+      val touched: Seq[String] =
+        if (candidates.isEmpty) Seq.empty
+        else members(readLive(spark, dir, candidates)
+            .withColumn("_graft_file", input_file_name()), anti = false)
           .select(col("_graft_file")).distinct()
           .collect().map(_.getString(0)).toSeq
           .map(u => uriOf.getOrElse(u,
             throw new IllegalStateException(
               s"TableLog: scan file $u not in the live set")))
-      }
-    if (touched.isEmpty) return // nothing contains a doomed key
-    val liveTouched = readLive(spark, dir, touched)
-    val survivors = inVals match {
-      case Some(vs) => liveTouched.filter(col(key).isNull ||
-        !col(key).isInCollection(vs))
-      case None => liveTouched.join(broadcast(keys.get), Seq(key),
-        "left_anti")
-    }
-    // same key-space rule as upsert: stats-key merges may prove
-    // disjointness, any other key stays conservative (None already)
-    val rebaseKeys = sortedKeys.map(_.stats)
-    commitRebased(spark, dir, v,
-      writeData(spark, sizeForWrite(spark, survivors), dir, v),
-      touched, keyed = true, rebaseKeys, txn, maxRebases)
+      body(Touched(touched, sortedKeys.map(_.stats),
+        Option.when(touched.nonEmpty)(
+          members(readLive(spark, dir, touched), anti = true))))
     } finally keys.foreach(_.unpersist(blocking = false))
   }
 
@@ -1911,23 +1807,24 @@ object TableLog {
       case None => liveStats
       case Some(ks) => liveStats.filter {
         case AddEntry(_, None) => true
-        case AddEntry(_, Some((lo, hi))) =>
-          val i = java.util.Arrays.binarySearch(ks, lo)
-          val at = if (i >= 0) i else -i - 1 // first key >= lo
-          at < ks.length && ks(at) <= hi
+        case AddEntry(_, Some((lo, hi))) => anyKeyIn(ks, lo, hi)
       }
     }
+
+  /** Does the sorted `ks` hold some key in [lo, hi]? */
+  private def anyKeyIn(ks: Array[Long], lo: Long, hi: Long): Boolean = {
+    val i = java.util.Arrays.binarySearch(ks, lo)
+    val at = if (i >= 0) i else -i - 1 // first key >= lo
+    at < ks.length && ks(at) <= hi
+  }
 
   /** The candidate count [[upsert]]'s manifest-stats stage would scan
     * for this batch — exposed so specs and probes can pin the
     * skipping invariant without instrumenting the write path. */
   def statsCandidates(spark: SparkSession, dir: String,
       batch: DataFrame, key: String): Int =
-    if (!statsKeyOf(spark, dir).contains(key))
-      liveFileStats(spark, dir).size
-    else statsSurvivors(liveFileStats(spark, dir),
-      sortedBatchKeys(batch.select(col(key)).distinct(), key,
-        statsKeyKindOf(spark, dir).getOrElse("long")).map(_.stats)).size
+    pruneCandidates(spark, dir, batch.select(col(key)).distinct(), key,
+      liveFileStats(spark, dir))._2.size
 
   /** OPTIMIZE: rewrite the live files into target-sized bins (the
     * q_compact_plan cumulative rule, ONE distributed job — same shape
@@ -2281,12 +2178,11 @@ object TableLog {
     }
     // truncate manifests no retained version replays: everything
     // below the newest checkpoint at or under the watermark (that
-    // checkpoint is the replay base for the oldest retained reads;
-    // format-2 only — a legacy checkpoint carries no txn marks, so
-    // the manifests under it still back appendOnce's idempotence)
+    // checkpoint is the replay base for the oldest retained reads,
+    // and its txn lines back appendOnce's idempotence)
     checkpointVersionsListed(fs, dir).filter(_ <= earliest)
       .sorted.lastOption.foreach { base =>
-      if (base > 0 && parseCheckpoint(fs, checkpointPath(dir, base)).isV2) {
+      if (base > 0) {
         // walk DOWN and stop at the first gap: manifests are
         // contiguous, so everything below an earlier truncation is
         // already gone — steady-state cost is O(1), not O(versions)

@@ -511,16 +511,16 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
     assert(names == Seq("_last_checkpoint"), names)
   }
 
-  test("upgrading a LEGACY (format-1) checkpoint back-fills txn marks " +
-      "so exactly-once survives the upgrade + truncation") {
+  test("a checkpoint without the format-2 header is refused loudly, " +
+      "naming its file") {
     val dir = Files.createTempDirectory("tl-legacy").toString
     TableLog.writeBase(spark, base(50), dir)
     (0 until 3).foreach { i =>
       TableLog.appendOnce(spark, dir,
         Seq((1000L + i, s"a$i")).toDF("id", "body"), "appA", i.toLong)
     }
-    // hand-write a round-7-style format-1 checkpoint at v3 (add lines
-    // only, no header, no txn lines) + its pointer
+    // hand-write a round-7-style checkpoint at v3 (add lines only, no
+    // header, no txn lines) + its pointer
     val f = fs(dir)
     val body = TableLog.liveFileStats(spark, dir).map {
       case TableLog.AddEntry(rel, Some((lo, hi))) => s"add\t$rel\t$lo\t$hi"
@@ -531,24 +531,17 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
     assert(TableLog.writeSmallFileAtomic(f,
       new Path(s"$dir/_log/_last_checkpoint"), "3", overwrite = true))
 
-    // one more commit, then the first FORMAT-2 checkpoint on top of
-    // the legacy base — appA's last stamp (batch 2) sits BELOW the
-    // legacy checkpoint and must be back-filled from the old
-    // manifests into the new checkpoint's txn lines
-    TableLog.appendOnce(spark, dir,
-      Seq((2000L, "x")).toDF("id", "body"), "appB", 0L)
-    TableLog.checkpoint(spark, dir) // v4, format 2
-    // simulate truncation of everything below it
-    (0 until 4).foreach(v => assert(f.delete(manifest(dir, v), false)))
-    // the replayed batch must STILL no-op
-    TableLog.appendOnce(spark, dir,
-      Seq((1002L, "dup")).toDF("id", "body"), "appA", 2L)
-    TableLog.currentVersion(spark, dir) shouldBe 4
-    TableLog.readVersion(spark, dir).count() shouldBe 54
-    // and fresh batches from both apps still land
-    TableLog.appendOnce(spark, dir,
-      Seq((1003L, "a3")).toDF("id", "body"), "appA", 3L)
-    TableLog.readVersion(spark, dir).count() shouldBe 55
+    // its txn state is missing, so neither a read nor an idempotent
+    // append may trust it: both fail, naming the file
+    val cp = cpFile(dir, 3).toString
+    intercept[IllegalArgumentException] {
+      TableLog.readVersion(spark, dir)
+    }.getMessage should include(cp)
+    intercept[IllegalArgumentException] {
+      TableLog.appendOnce(spark, dir,
+        Seq((1002L, "dup")).toDF("id", "body"), "appA", 2L)
+    }.getMessage should include(cp)
+    TableLog.currentVersion(spark, dir) shouldBe 3
   }
 
   test("two genuinely concurrent disjoint upserts both land (one " +
