@@ -684,8 +684,8 @@ object TableLog {
       _.fields.find(f => normName(f.name) == normName(key)))
       .map(_.dataType)
 
-  /** Stage-1 candidate pruning shared by MERGE, DELETE, and keyed
-    * reads — ONE definition of the rule "keys enter stats space only
+  /** Stage-1 candidate pruning shared by the MERGE core, keyed reads
+    * and [[statsCandidates]] — ONE definition of the rule "keys enter stats space only
     * when `key` IS the table's stats key, in the recorded kind", so
     * the read and write paths can never diverge on which files
     * prune. Returns (sorted stats-space keys — None when stats can't
