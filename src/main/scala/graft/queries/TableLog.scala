@@ -685,11 +685,11 @@ object TableLog {
       .map(_.dataType)
 
   /** Stage-1 candidate pruning shared by the MERGE core, keyed reads
-    * and [[statsCandidates]] — ONE definition of the rule "keys enter stats space only
-    * when `key` IS the table's stats key, in the recorded kind", so
-    * the read and write paths can never diverge on which files
-    * prune. Returns (sorted stats-space keys — None when stats can't
-    * apply, candidate rels). */
+    * and [[statsCandidates]] — ONE definition of the rule "keys enter
+    * stats space only when `key` IS the table's stats key, in the
+    * recorded kind", so the read and write paths can never diverge on
+    * which files prune. Returns (sorted stats-space keys — None when
+    * stats can't apply, candidate rels). */
   private def pruneCandidates(spark: SparkSession, dir: String,
       keys: DataFrame, key: String, liveStats: Seq[AddEntry])
       : (Option[BatchKeys], Seq[String]) = {
