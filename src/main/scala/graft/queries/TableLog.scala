@@ -1561,12 +1561,13 @@ object TableLog {
     // tables keep deriving from the files: a crash between an
     // evolving commit and its schema-widening write legally leaves
     // the logged copy stale, and only the files tell the truth.
+    val logged = loggedSchema(spark, dir)
     val tableSchema =
-      (if (isEvolved(spark, dir)) None else loggedSchema(spark, dir))
+      (if (isEvolved(spark, dir)) None else logged)
         .getOrElse {
           if (liveStats.nonEmpty)
             readLive(spark, dir, liveStats.map(_.rel)).schema
-          else loggedSchema(spark, dir).getOrElse(batch.schema)
+          else logged.getOrElse(batch.schema)
         }
     batch.schema.foreach { f =>
       tableSchema.find(t => norm(t.name) == norm(f.name)).foreach { t =>
@@ -1647,14 +1648,17 @@ object TableLog {
         // widen the logged schema to the union AFTER the commit landed
         // — the remembered shape must track every evolution, but an
         // ABORTED upsert must never persist phantom columns that no
-        // committed file carries (a crash between commit and widen
-        // only loses the reminder; the files themselves still
-        // merge-read with the true schema, and the next evolving
-        // upsert re-records it)
-        if (marksEvolution)
-          writeLoggedSchema(fs, dir, StructType(tableSchema.fields ++
-            batch.schema.fields.filterNot(f =>
-              tableCols.contains(norm(f.name)))))
+        // committed file carries. A crash between commit and widen
+        // only loses the reminder: the files still merge-read with the
+        // true schema, and the next upsert on the evolved table, a
+        // retry included, records the columns the record lacks
+        val widened = StructType(tableSchema.fields ++
+          batch.schema.fields.filterNot(f =>
+            tableCols.contains(norm(f.name))))
+        val recorded = logged.map(_.fieldNames.map(norm).toSet)
+        if (marksEvolution || recorded.exists(r =>
+            !widened.fieldNames.forall(n => r(norm(n)))))
+          writeLoggedSchema(fs, dir, widened)
       } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
     }
   }

@@ -19,7 +19,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `rename` keeps the rule of Hive's `ProxyLocalFileSystem`, which
   * owned `file://` before (through hive-exec's service-loader entry):
   * an existing destination FILE is refused, never replaced. */
-class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw) {
+class NioLocalFileSystem(raw: NioLocalFileSystem.Raw)
+    extends LocalFileSystem(raw) {
+  def this() = this(new NioLocalFileSystem.Raw)
+
   override def rename(src: Path, dst: Path): Boolean =
     !pathToFile(dst).isFile && super.rename(src, dst)
 }
