@@ -128,8 +128,7 @@ object MaterializedAgg {
     }
 
     // spec drift is silent corruption — refuse it loudly
-    require(fs.exists(specPath) &&
-      TableLog.readSmallFile(fs, specPath).trim == spec,
+    require(TableLog.readLogFile(fs, specPath).exists(_.trim == spec),
       s"MaterializedAgg: $viewDir was built with a different view " +
         "spec — rebuild into a fresh dir instead of diverging")
     val last = TableLog.txnHighWater(spark, viewDir, App).getOrElse(

@@ -4,11 +4,14 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil,
+  Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
   LongType, ShortType, StructType}
+
+import graft.sources.NioLocalFileSystem
 
 /** Versioned-table tier: a manifest log over plain parquet files —
   * the Delta/Iceberg shape a 100 TB training-data pipeline actually
@@ -78,125 +81,95 @@ object TableLog {
   private def checkpointPath(dir: String, v: Int) =
     new Path(logDir(dir), f"v$v%05d.checkpoint")
 
+  /** A log file's content, read from the OPENED stream to its end:
+    * after an atomic replace, a length taken from a separate stat
+    * would belong to the new file, not the one open. */
   private[queries] def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try new String({
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      in.readFully(0, buf)
-      buf
-    }, StandardCharsets.UTF_8)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
   }
 
-  /** Write a small log file ATOMICALLY: temp file + publish, so no
-    * reader (or post-crash retry) can ever observe a torn or empty
-    * file under the final name. `overwrite` deletes an existing final
-    * file first (watermark/pointer updates). Without it the publish
-    * must be EXCLUSIVE — the commit race's loser gets `false`, never
-    * a clobber. HDFS rename already refuses an existing destination;
-    * POSIX rename REPLACES it (two local racers could both "win",
-    * the second silently erasing the first's manifest — review-
-    * caught), so local filesystems publish via link(2), which is
-    * atomic-exclusive by contract. Object stores without atomic
-    * rename (raw S3) need a coordinating log store for multi-writer
-    * commits — the same caveat every lakehouse format documents. */
+  /** An optional log file's content; None when it does not exist. On
+    * `file:` and HDFS a replace is atomic, so an existing file never
+    * goes missing. A store whose `OVERWRITE` deletes and then renames
+    * has that window, so a file lost between the exists() and the
+    * open is looked up once more. */
+  private[queries] def readLogFile(fs: FileSystem, p: Path): Option[String] = {
+    def once() = if (fs.exists(p)) Some(readSmallFile(fs, p)) else None
+    try once() catch { case _: java.io.FileNotFoundException => once() }
+  }
+
+  /** The filesystem log files publish through: the one below any
+    * checksum layer, so log files carry no `.crc` sibling. A raw
+    * local filesystem other than [[NioLocalFileSystem.Raw]] renames
+    * by replacing, which would let two racing commits both "win"; it
+    * is refused, naming the setting that installs the right one. */
+  private def publishFs(fs: FileSystem): FileSystem = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    require(!raw.isInstanceOf[RawLocalFileSystem] ||
+      raw.isInstanceOf[NioLocalFileSystem.Raw],
+      s"TableLog: ${raw.getClass.getName} replaces an existing file on " +
+        "rename, so log publishes would not be exclusive; set " +
+        s"fs.file.impl to ${classOf[NioLocalFileSystem].getName}")
+    raw
+  }
+
+  /** Write a small log file ATOMICALLY: a temp file, then one publish,
+    * so no reader (or post-crash retry) ever sees a torn or empty
+    * file under the final name. Without `overwrite` the publish is
+    * EXCLUSIVE: `rename` refuses an existing destination (HDFS by
+    * contract, the local filesystem through link(2)), so the commit
+    * race's loser gets `false`, never a clobber. With it the publish
+    * is `Rename.OVERWRITE`, an atomic replace on `file:` and HDFS:
+    * there is no delete-then-rename window in which a reader finds
+    * the file missing (a missing _constraints would read as ZERO
+    * constraints and wave violations through). Object stores without
+    * atomic rename (raw S3) need a coordinating log store for
+    * multi-writer commits — the same caveat every lakehouse format
+    * documents. */
   private[queries] def writeSmallFileAtomic(fs: FileSystem, p: Path,
       body: String, overwrite: Boolean): Boolean = {
+    val raw = publishFs(fs)
     val tmp = new Path(p.getParent, s".${p.getName}.${
       java.util.UUID.randomUUID.toString}.tmp")
-    val out = fs.create(tmp, false)
+    val out = raw.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (!overwrite && fs.getScheme == "file") {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        fs.delete(tmp, false)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-          false
-      }
-    } else if (overwrite) {
-      // ATOMIC REPLACE — never delete-then-rename: a reader racing
-      // an update (constraints check vs ADD CONSTRAINT, statskey
-      // lookup vs a writeBase retry) must see the old value or the
-      // new one, never a missing file (a missing _constraints reads
-      // as ZERO constraints and waves violations through)
-      if (fs.getScheme == "file") {
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp.toUri.getPath),
-          java.nio.file.Paths.get(p.toUri.getPath),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        // the move leaves the temp's checksum sibling behind (the
-        // link branch drops it through fs.delete)
-        fs match {
-          case cfs: org.apache.hadoop.fs.ChecksumFileSystem =>
-            cfs.getRawFileSystem.delete(cfs.getChecksumFile(tmp), false)
-          case _ =>
-        }
-        true
-      } else {
-        try {
-          org.apache.hadoop.fs.FileContext
-            .getFileContext(p.toUri, fs.getConf)
-            .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    var published = false
+    try {
+      published =
+        if (overwrite) {
+          FileUtil.rename(raw, tmp, p, Options.Rename.OVERWRITE)
           true
-        } catch {
-          case _: UnsupportedOperationException =>
-            // last resort on stores without atomic replace: the
-            // delete window exists; readers of overwritten files
-            // already retry around it
-            if (fs.exists(p)) fs.delete(p, false)
-            val ok = fs.rename(tmp, p)
-            if (!ok) fs.delete(tmp, false)
-            ok
-        }
-      }
-    } else {
-      val ok = fs.rename(tmp, p)
-      if (!ok) fs.delete(tmp, false)
-      ok
-    }
+        } else raw.rename(tmp, p)
+      published
+    } finally if (!published) raw.delete(tmp, false)
   }
 
   /** Earliest version still readable (0 unless [[vacuum]] advanced
-    * the watermark). Tolerates the watermark UPDATE's brief
-    * delete-then-rename window: a reader racing it retries once, and
-    * if the file is genuinely gone reads 0 — the watermark only ever
-    * advances, so the stale answer at worst lets a read attempt a
-    * vacuumed version and fail at the scan, never corrupts. */
-  def earliestVersion(spark: SparkSession, dir: String): Int = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(logDir(dir), "_earliest")
-    if (!fs.exists(p)) 0
-    else try readSmallFile(fs, p).trim.toInt
-    catch {
-      case _: java.io.FileNotFoundException =>
-        if (fs.exists(p)) readSmallFile(fs, p).trim.toInt else 0
-    }
-  }
+    * the watermark). The watermark is replaced atomically, so a
+    * reader racing [[vacuum]] sees the old value or the new one; the
+    * watermark only ever advances, so the old value at worst lets a
+    * read attempt a vacuumed version and fail at the scan, never
+    * corrupts. */
+  def earliestVersion(spark: SparkSession, dir: String): Int =
+    readLogFile(fsOf(spark, dir), new Path(logDir(dir), "_earliest"))
+      .fold(0)(_.trim.toInt)
 
   /** The `_last_checkpoint` pointer — the newest checkpoint's
     * version in ONE small-file read, no directory listing. Absent on
     * never-checkpointed tables (and in the crash window between a
     * checkpoint write and its pointer update — both fall back to the
-    * listing). Tolerates the pointer UPDATE's delete-then-rename
-    * window the same way [[earliestVersion]] does. */
+    * listing). The pointer is replaced atomically, so a reader racing
+    * its update sees the old version or the new one. */
   private def lastCheckpointVersion(fs: FileSystem,
-      dir: String): Option[Int] = {
-    val p = new Path(logDir(dir), "_last_checkpoint")
-    if (!fs.exists(p)) None
-    else try Some(readSmallFile(fs, p).trim.toInt)
-    catch {
-      case _: java.io.FileNotFoundException =>
-        if (fs.exists(p)) Some(readSmallFile(fs, p).trim.toInt) else None
-    }
-  }
+      dir: String): Option[Int] =
+    readLogFile(fs, new Path(logDir(dir), "_last_checkpoint"))
+      .map(_.trim.toInt)
 
   /** Versions with a checkpoint file, ascending — the LISTING path,
     * used only off the steady state (no pointer yet, or time travel
@@ -492,20 +465,13 @@ object TableLog {
   private def readLive(spark: SparkSession, dir: String,
       rels: Seq[String]): DataFrame =
     // a fully-deleted table has an EMPTY live set — read honestly
-    // empty WITH the logged schema (the schema outlives the files);
-    // only a legacy table without schema tracking degrades to 0 cols
-    if (rels.isEmpty)
-      loggedSchema(spark, dir).map(emptyOf(spark, _))
-        .getOrElse(spark.emptyDataFrame)
+    // empty WITH the logged schema (the schema outlives the files)
+    if (rels.isEmpty) emptyOf(spark, loggedSchema(spark, dir))
     else if (isEvolved(spark, dir))
       spark.read.option("mergeSchema", "true")
         .parquet(rels.map(r => s"$dir/$r"): _*)
-    else loggedSchema(spark, dir) match {
-      case Some(s) => spark.read.schema(allNullable(s))
-        .parquet(rels.map(r => s"$dir/$r"): _*)
-      case None => spark.read.option("mergeSchema", "false")
-        .parquet(rels.map(r => s"$dir/$r"): _*)
-    }
+    else spark.read.schema(allNullable(loggedSchema(spark, dir)))
+      .parquet(rels.map(r => s"$dir/$r"): _*)
 
   /** Parquet read returns every field nullable; a supplied schema
     * must claim the same or downstream nullability-sensitive plans
@@ -552,8 +518,7 @@ object TableLog {
     * predicate still applies (pruning is an optimization, row-level
     * correctness comes from the filter — exactly parquet row-group
     * skipping's contract, one level up). An empty survivor set keeps
-    * the schema: the logged schema when tracked, else one live
-    * file's footer. */
+    * the schema ([[emptySnapshot]]). */
   def readVersionRange(spark: SparkSession, dir: String, lo: Long,
       hi: Long, version: Option[Int] = None): DataFrame = {
     val k = rangeReadKey(spark, dir, "long")
@@ -674,15 +639,14 @@ object TableLog {
         if (anti) "left_anti" else "left_semi")
     }
 
-  /** The key column's declared type from the LOGGED schema — None on
-    * legacy tables (no schema tracking) or in the crash window where
-    * an evolving upsert committed before widening the record; callers
-    * then fall back to the broadcast-join path, which needs no type. */
+  /** The key column's declared type from the LOGGED schema — None in
+    * the crash window where an evolving upsert that added the key
+    * committed before widening the record; callers then fall back to
+    * the broadcast-join path, which needs no type. */
   private def keyTypeOf(spark: SparkSession, dir: String,
       key: String): Option[DataType] =
-    loggedSchema(spark, dir).flatMap(
-      _.fields.find(f => normName(f.name) == normName(key)))
-      .map(_.dataType)
+    loggedSchema(spark, dir).fields
+      .find(f => normName(f.name) == normName(key)).map(_.dataType)
 
   /** Stage-1 candidate pruning shared by the MERGE core, keyed reads
     * and [[statsCandidates]] — ONE definition of the rule "keys enter
@@ -712,21 +676,11 @@ object TableLog {
     * columns the version never had), falling back to the logged
     * schema only when the version has no files at all. */
   private def emptySnapshot(spark: SparkSession, dir: String,
-      version: Option[Int]): DataFrame = version match {
-    case None =>
-      loggedSchema(spark, dir).map(emptyOf(spark, _)).getOrElse {
-        val live = liveFiles(spark, dir, None)
-        if (live.nonEmpty)
-          readLive(spark, dir, live.take(1)).filter(lit(false))
-        else spark.emptyDataFrame
-      }
-    case Some(_) =>
-      val live = liveFiles(spark, dir, version)
-      if (live.nonEmpty)
-        readLive(spark, dir, live).filter(lit(false))
-      else loggedSchema(spark, dir).map(emptyOf(spark, _))
-        .getOrElse(spark.emptyDataFrame)
-  }
+      version: Option[Int]): DataFrame =
+    version.map(v => liveFiles(spark, dir, Some(v))).filter(_.nonEmpty) match {
+      case Some(live) => readLive(spark, dir, live).filter(lit(false))
+      case None => emptyOf(spark, loggedSchema(spark, dir))
+    }
 
   /** POINT-LOOKUP read: live files whose manifest stats range
     * contains at least one requested key are scanned (per-key binary
@@ -784,27 +738,21 @@ object TableLog {
       fromV: Int, toV: Int): (DataFrame, DataFrame, StructType) = {
     require(fromV < toV, s"TableLog: change feed needs fromV < toV")
     val a = liveFiles(spark, dir, Some(fromV)).toSet
-    val bLive = liveFiles(spark, dir, Some(toV))
-    val b = bLive.toSet
+    val b = liveFiles(spark, dir, Some(toV)).toSet
     val removed = (a -- b).toSeq.sorted
     val added = (b -- a).toSeq.sorted
     val churn = removed ++ added
     // schema from the CHURNED files only; across a column-adding
     // evolution this is the pre/post UNION schema. An empty churn
-    // means zero changes: the logged schema (or, legacy, one live
-    // footer) shapes the empty result. A full-table wipe keeps
-    // working -- removed is non-empty even when toV is empty.
+    // means zero changes: the logged schema shapes the empty result.
+    // A full-table wipe keeps working -- removed is non-empty even
+    // when toV is empty.
+    val logged = loggedSchema(spark, dir)
     val fileSchema: StructType =
-      if (churn.nonEmpty) readLive(spark, dir, churn).schema
-      else loggedSchema(spark, dir).getOrElse(
-        readLive(spark, dir, bLive.take(1)).schema)
-    val schema: StructType = loggedSchema(spark, dir) match {
-      case Some(ls) =>
-        val have = fileSchema.map(f => normName(f.name)).toSet
-        StructType(fileSchema.fields ++
-          ls.fields.filterNot(f => have(normName(f.name))))
-      case None => fileSchema
-    }
+      if (churn.nonEmpty) readLive(spark, dir, churn).schema else logged
+    val have = fileSchema.map(f => normName(f.name)).toSet
+    val schema = StructType(fileSchema.fields ++
+      logged.fields.filterNot(f => have(normName(f.name))))
     // each side aligns to the union schema: the pre side of a
     // column-adding evolution reads files that PREDATE the column,
     // so missing columns null-fill as typed literals instead of
@@ -924,15 +872,12 @@ object TableLog {
     statsKeyLine(spark, dir).map(_._2)
 
   private def statsKeyLine(spark: SparkSession,
-      dir: String): Option[(String, String)] = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(logDir(dir), "_statskey")
-    if (!fs.exists(p)) None
-    else {
-      val parts = readSmallFile(fs, p).trim.split('\t')
-      Some((parts(0), if (parts.length > 1) parts(1) else "long"))
-    }
-  }
+      dir: String): Option[(String, String)] =
+    readLogFile(fsOf(spark, dir), new Path(logDir(dir), "_statskey"))
+      .map { line =>
+        val parts = line.trim.split('\t')
+        (parts(0), if (parts.length > 1) parts(1) else "long")
+      }
 
   /** Order-preserving encoding of a string key into SIGNED long
     * space: the first 8 UTF-8 bytes, big-endian, zero-padded, with
@@ -966,14 +911,14 @@ object TableLog {
     * This is what lets an EMPTY live set (a fully-deleted table)
     * still read, CDC, and re-populate with its true schema instead
     * of degrading to zero columns: the schema outlives the data
-    * files. Absent on tables created before schema tracking —
-    * callers fall back to footer inference. */
-  def loggedSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val fs = fsOf(spark, dir)
+    * files. A table without the file predates schema tracking; no
+    * writer here makes one, and it is refused, naming the file. */
+  def loggedSchema(spark: SparkSession, dir: String): StructType = {
     val p = new Path(logDir(dir), "_schema")
-    if (!fs.exists(p)) None
-    else Some(DataType.fromJson(readSmallFile(fs, p))
-      .asInstanceOf[StructType])
+    readLogFile(fsOf(spark, dir), p).map(DataType.fromJson(_)
+      .asInstanceOf[StructType]).getOrElse(throw new IllegalArgumentException(
+        s"TableLog: $p is missing — tables without a logged schema are " +
+          "not read"))
   }
 
   private def writeLoggedSchema(fs: FileSystem, dir: String,
@@ -998,15 +943,16 @@ object TableLog {
     * would then be described by the loser's metadata). */
   private[queries] def writeMetaExclusive(fs: FileSystem, p: Path,
       content: String): Unit = {
-    def matches() = readSmallFile(fs, p).trim == content.trim
-    if (fs.exists(p))
-      require(matches(),
+    def matches() = readLogFile(fs, p).map(_.trim == content.trim)
+    matches() match {
+      case Some(same) => require(same,
         s"TableLog: $p already exists with different content — a " +
           "concurrent bootstrap owns this table")
-    else if (!writeSmallFileAtomic(fs, p, content, overwrite = false))
-      require(fs.exists(p) && matches(),
-        s"TableLog: lost the $p bootstrap race to a writer with " +
-          "different content")
+      case None => if (!writeSmallFileAtomic(fs, p, content, false))
+        require(matches().contains(true),
+          s"TableLog: lost the $p bootstrap race to a writer with " +
+            "different content")
+    }
   }
 
   /** CHECK constraints — the write-path quality gate of real table
@@ -1019,16 +965,13 @@ object TableLog {
     * construction: they only re-write rows that already passed.
     * A violating write is REFUSED before any commit, with samples. */
   def constraintsOf(spark: SparkSession,
-      dir: String): Seq[(String, String)] = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(logDir(dir), "_constraints")
-    if (!fs.exists(p)) Seq.empty
-    else readSmallFile(fs, p).split('\n').filter(_.nonEmpty).toSeq
-      .map { line =>
-        val cut = line.indexOf('\t')
-        (line.substring(0, cut), line.substring(cut + 1))
-      }
-  }
+      dir: String): Seq[(String, String)] =
+    readLogFile(fsOf(spark, dir), new Path(logDir(dir), "_constraints"))
+      .fold(Seq.empty[(String, String)])(_.split('\n').filter(_.nonEmpty)
+        .toSeq.map { line =>
+          val cut = line.indexOf('\t')
+          (line.substring(0, cut), line.substring(cut + 1))
+        })
 
   /** Record constraint `name` := `sqlExpr` after validating the
     * ENTIRE current table against it (a constraint that the existing
@@ -1552,44 +1495,25 @@ object TableLog {
     // schema comes from the live set in hand (no second log replay).
     def norm(s: String) = normName(s)
     // a fully-deleted table still REMEMBERS its schema in the log —
-    // a re-population batch honors the same contract as any other
-    // (only a legacy table without schema tracking can check the
-    // batch against nothing but itself). NEVER-EVOLVED tables take
-    // the logged schema directly (exact by construction: writeBase
-    // recorded it and no evolution has widened it) — skipping a
-    // full live-set listing + footer inference per MERGE. Evolved
-    // tables keep deriving from the files: a crash between an
-    // evolving commit and its schema-widening write legally leaves
-    // the logged copy stale, and only the files tell the truth.
+    // a re-population batch honors the same contract as any other,
+    // the statsKey's integral or string type included.
+    // NEVER-EVOLVED tables take the logged schema directly (exact by
+    // construction: writeBase recorded it and no evolution has
+    // widened it) — skipping a full live-set listing + footer
+    // inference per MERGE. Evolved tables keep deriving from the
+    // files: a crash between an evolving commit and its
+    // schema-widening write legally leaves the logged copy stale,
+    // and only the files tell the truth.
     val logged = loggedSchema(spark, dir)
     val tableSchema =
-      (if (isEvolved(spark, dir)) None else logged)
-        .getOrElse {
-          if (liveStats.nonEmpty)
-            readLive(spark, dir, liveStats.map(_.rel)).schema
-          else logged.getOrElse(batch.schema)
-        }
+      if (liveStats.nonEmpty && isEvolved(spark, dir))
+        readLive(spark, dir, liveStats.map(_.rel)).schema
+      else logged
     batch.schema.foreach { f =>
       tableSchema.find(t => norm(t.name) == norm(f.name)).foreach { t =>
         require(t.dataType == f.dataType,
           s"TableLog: batch column ${f.name} is ${f.dataType}, table " +
             s"has ${t.dataType} — a type conflict cannot be committed")
-      }
-    }
-    // the statsKey integrality contract survives emptiness: a truly
-    // empty LEGACY table (no remembered schema to conflict with)
-    // must not let a re-population batch smuggle in a non-integral
-    // key whose lexicographic min/max would corrupt every later
-    // pruning decision
-    if (liveStats.isEmpty) statsKeyOf(spark, dir).foreach { k =>
-      val wantStr = statsKeyKindOf(spark, dir).contains("string")
-      batch.schema.find(f => norm(f.name) == norm(k)).foreach { f =>
-        require(
-          if (wantStr) f.dataType == org.apache.spark.sql.types.StringType
-          else isIntegralType(f.dataType),
-          s"TableLog: statsKey $k must stay " +
-            s"${if (wantStr) "string" else "integral"}, got " +
-            s"${f.dataType}")
       }
     }
     val tableCols = tableSchema.map(f => norm(f.name)).toSet
@@ -1655,9 +1579,8 @@ object TableLog {
         val widened = StructType(tableSchema.fields ++
           batch.schema.fields.filterNot(f =>
             tableCols.contains(norm(f.name))))
-        val recorded = logged.map(_.fieldNames.map(norm).toSet)
-        if (marksEvolution || recorded.exists(r =>
-            !widened.fieldNames.forall(n => r(norm(n)))))
+        val recorded = logged.fieldNames.map(norm).toSet
+        if (marksEvolution || !widened.fieldNames.forall(n => recorded(norm(n))))
           writeLoggedSchema(fs, dir, widened)
       } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
     }

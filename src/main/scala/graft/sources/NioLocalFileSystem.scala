@@ -1,9 +1,12 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.io.IOException
+import java.nio.file.{FileAlreadyExistsException, Files, LinkOption,
+  StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermissions
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{LocalFileSystem, Options, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file://` filesystem of every Hadoop `Configuration` in the JVM,
@@ -18,13 +21,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * `rename` keeps the rule of Hive's `ProxyLocalFileSystem`, which
   * owned `file://` before (through hive-exec's service-loader entry):
-  * an existing destination FILE is refused, never replaced. */
+  * an existing destination FILE is refused, never replaced. The raw
+  * filesystem makes that refusal atomic and adds an atomic replace
+  * (see [[NioLocalFileSystem.Raw]]). */
 class NioLocalFileSystem(raw: NioLocalFileSystem.Raw)
     extends LocalFileSystem(raw) {
   def this() = this(new NioLocalFileSystem.Raw)
-
-  override def rename(src: Path, dst: Path): Boolean =
-    !pathToFile(dst).isFile && super.rename(src, dst)
 }
 
 object NioLocalFileSystem {
@@ -32,11 +34,14 @@ object NioLocalFileSystem {
   /** setuid | setgid | sticky (octal 7000). */
   private val SpecialBits = 0xe00
 
-  /** Stock raw local filesystem whose `setPermission` skips the fork.
+  /** Stock raw local filesystem whose `setPermission` skips the fork
+    * and whose renames are the two publishes a table log needs.
+    *
     * NIO carries only the nine rwx bits, so whenever a special bit is
     * in play — a sticky bit asked for, or setuid/setgid/sticky already
     * on the path (`chmod 0755` keeps a directory's setgid bit;
-    * `chmod(2)` would clear it) — the stock method runs instead. */
+    * `chmod(2)` would clear it) — the stock `setPermission` runs
+    * instead. */
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val f = pathToFile(p).toPath
@@ -46,6 +51,49 @@ object NioLocalFileSystem {
       else Files.setPosixFilePermissions(f, PosixFilePermissions.fromString(
         Seq(permission.getUserAction, permission.getGroupAction,
           permission.getOtherAction).map(_.SYMBOL).mkString))
+    }
+
+    /** A regular file onto a non-directory moves ATOMIC-EXCLUSIVELY:
+      * `link(2)` the destination, then unlink the source. An existing
+      * destination fails the link, so it is refused (`false`), never
+      * replaced, and of two racers onto one name exactly one wins — a
+      * POSIX `rename(2)` would let the second silently replace the
+      * first. Directories, a directory destination (move into it) and
+      * moves `link(2)` cannot make, such as across devices, take the
+      * stock path behind a refuse-if-exists check. */
+    override def rename(src: Path, dst: Path): Boolean = {
+      val s = pathToFile(src).toPath
+      val d = pathToFile(dst).toPath
+      val linked: Option[Boolean] =
+        if (!Files.isRegularFile(s, LinkOption.NOFOLLOW_LINKS) ||
+            Files.isDirectory(d)) None
+        else try { Files.createLink(d, s); Some(true) } catch {
+          case _: FileAlreadyExistsException => Some(false)
+          case _: IOException => None
+        }
+      linked match {
+        case Some(won) =>
+          if (won) Files.delete(s)
+          won
+        case None => !Files.isRegularFile(d) && super.rename(src, dst)
+      }
+    }
+
+    /** `OVERWRITE` of a regular file onto a non-directory is one
+      * `rename(2)`: an ATOMIC REPLACE, so a reader sees the old file or
+      * the new one and never a missing one. The stock method deletes
+      * the destination first and then renames; it still serves every
+      * other case. */
+    override protected def rename(src: Path, dst: Path,
+        options: Options.Rename*): Unit = {
+      val s = pathToFile(src).toPath
+      val d = pathToFile(dst).toPath
+      if (options.contains(Options.Rename.OVERWRITE) &&
+          Files.isRegularFile(s, LinkOption.NOFOLLOW_LINKS) &&
+          !Files.isDirectory(d))
+        Files.move(s, d, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      else super.rename(src, dst, options: _*)
     }
   }
 }

@@ -1,16 +1,19 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.net.URI
+import java.nio.file.{Files, StandardCopyOption}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.sources.NioLocalFileSystem
 
 /** Round-8 [[TableLog]] hardening: bounded log metadata (the
   * `_last_checkpoint` pointer, txn marks folded into checkpoints,
@@ -365,13 +368,6 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
       TableLog.upsert(spark, dir,
         Seq(("1", "smuggled")).toDF("id", "body"), "id")
     }.getMessage should include("type conflict")
-    // …and on a LEGACY table (no logged schema, no files) the
-    // statsKey integrality guard itself refuses the smuggle
-    fs(dir).delete(new Path(s"$dir/_log/_schema"), false)
-    intercept[IllegalArgumentException] {
-      TableLog.upsert(spark, dir,
-        Seq(("1", "smuggled")).toDF("id", "body"), "id")
-    }.getMessage should include("integral")
 
     // 2. CDC across a column-adding evolution: the pre side reads
     // files that PREDATE the column and must null-fill, not crash;
@@ -420,6 +416,22 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
     val nc = TableLog.changesBetween(spark, ndir, 0, 1, "id")
       .collect().map(r => (r.getString(0), r.getAs[String]("body")))
     nc.toSeq shouldBe Seq(("update", "one v2"))
+  }
+
+  test("a table without _log/_schema is refused, naming the file") {
+    val dir = Files.createTempDirectory("tl-noschema").toString
+    TableLog.writeBase(spark, base(40), dir, statsKey = Some("id"))
+    val schemaFile = s"$dir/_log/_schema"
+    fs(dir).delete(new Path(schemaFile), false)
+    intercept[IllegalArgumentException] {
+      TableLog.readVersion(spark, dir)
+    }.getMessage should include(schemaFile)
+    // refused before anything is written
+    intercept[IllegalArgumentException] {
+      TableLog.upsert(spark, dir, Seq((1L, "x")).toDF("id", "body"), "id")
+    }.getMessage should include(schemaFile)
+    TableLog.currentVersion(spark, dir) shouldBe 0
+    new java.io.File(s"$dir/data").list().length shouldBe 1
   }
 
   test("RESTORE rolls the content back as a NEW commit with zero " +
@@ -509,6 +521,48 @@ class TableLogBoundedSpec extends SparkSpec with Matchers {
     assert(TableLog.readSmallFile(f, p) == "3")
     val names = new java.io.File(s"$dir/_log").list().toSeq
     assert(names == Seq("_last_checkpoint"), names)
+  }
+
+  test("log publishes refuse a raw local filesystem that replaces on " +
+      "rename, naming fs.file.impl") {
+    val dir = Files.createTempDirectory("tl-stockfs").toString
+    val stock = new LocalFileSystem()
+    stock.initialize(URI.create("file:///"), new Configuration())
+    intercept[IllegalArgumentException] {
+      TableLog.writeSmallFileAtomic(stock,
+        new Path(s"$dir/_log/v00000.manifest"), "add\tx\n",
+        overwrite = false)
+    }.getMessage should include("fs.file.impl")
+    new java.io.File(s"$dir/_log").exists shouldBe false
+  }
+
+  test("readSmallFile returns the file it opened when an atomic " +
+      "replace lands between the open and the read") {
+    val dir = Files.createTempDirectory("tl-openrace")
+    val target = dir.resolve("_last_checkpoint")
+    @volatile var replacement: Option[String] = None
+    val racing = new NioLocalFileSystem {
+      override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+        val in = super.open(p, bufferSize)
+        replacement.foreach { body =>
+          val tmp = Files.createTempFile(dir, ".next", ".tmp")
+          Files.write(tmp, body.getBytes("UTF-8"))
+          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+        }
+        in
+      }
+    }
+    racing.initialize(URI.create("file:///"), new Configuration())
+    // a growing pointer (99 -> 100) and a shrinking constraint list
+    // (what dropConstraint publishes)
+    for ((old, next) <- Seq("99" -> "100",
+        "a\tid > 0\nb\tid < 9" -> "a\tid > 0")) {
+      Files.write(target, old.getBytes("UTF-8"))
+      replacement = Some(next)
+      TableLog.readSmallFile(racing, new Path(target.toString)) shouldBe old
+      replacement = None
+      TableLog.readSmallFile(racing, new Path(target.toString)) shouldBe next
+    }
   }
 
   test("a checkpoint without the format-2 header is refused loudly, " +

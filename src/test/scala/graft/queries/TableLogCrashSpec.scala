@@ -213,7 +213,6 @@ class TableLogCrashSpec extends SparkSpec {
     assert(crashMatrix(Some(history))(d =>
       TableLog.upsert(spark, d, Seq((8L, "u8", "T")).toDF("id", "body", "tag"),
         "id", allowSchemaEvolution = true))(
-      settled = d => TableLog.loggedSchema(spark, d)
-        .map(_.fieldNames.toSeq)) > 5)
+      settled = d => TableLog.loggedSchema(spark, d).fieldNames.toSeq) > 5)
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{File, FileOutputStream, RandomAccessFile}
 import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -163,6 +164,25 @@ class NioLocalFileSystemSpec extends SparkSpec {
       "second")
     assert(nio.rename(a, new Path(s"$d/c")))
     assert(!new File(s"$d/a").exists && new File(s"$d/c").isFile)
+    // a real race: two threads rename distinct temp files onto one
+    // name at once; exactly one wins and the name holds its bytes
+    val pool = Executors.newFixedThreadPool(2)
+    try (0 until 300).foreach { round =>
+      val dst = new Path(s"$d/race-$round")
+      val racers = Seq("x", "y")
+      val start = new CountDownLatch(1)
+      val won = racers.map { w =>
+        val tmp = put(s"$w-$round", s"$w$round")
+        pool.submit(new Callable[Boolean] {
+          def call(): Boolean = { start.await(); nio.rename(tmp, dst) }
+        })
+      }
+      start.countDown()
+      val wins = won.map(_.get)
+      assert(wins.count(identity) == 1, s"round $round: $wins")
+      assert(new String(Files.readAllBytes(new File(s"$d/race-$round")
+        .toPath)) == racers(wins.indexOf(true)) + round)
+    } finally pool.shutdown()
   }
 
   test("the bundled core-site.xml sets fs.file.impl and nothing else") {
