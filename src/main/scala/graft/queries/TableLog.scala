@@ -948,10 +948,11 @@ object TableLog {
       case Some(same) => require(same,
         s"TableLog: $p already exists with different content — a " +
           "concurrent bootstrap owns this table")
-      case None => if (!writeSmallFileAtomic(fs, p, content, false))
-        require(matches().contains(true),
-          s"TableLog: lost the $p bootstrap race to a writer with " +
-            "different content")
+      case None =>
+        if (!writeSmallFileAtomic(fs, p, content, overwrite = false))
+          require(matches().contains(true),
+            s"TableLog: lost the $p bootstrap race to a writer with " +
+              "different content")
     }
   }
 
