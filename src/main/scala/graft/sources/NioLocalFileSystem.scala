@@ -5,7 +5,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, LinkOption,
   StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermissions
 
-import org.apache.hadoop.fs.{LocalFileSystem, Options, Path,
+import org.apache.hadoop.fs.{FileUtil, LocalFileSystem, Options, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -27,6 +27,25 @@ import org.apache.hadoop.fs.permission.FsPermission
 class NioLocalFileSystem(raw: NioLocalFileSystem.Raw)
     extends LocalFileSystem(raw) {
   def this() = this(new NioLocalFileSystem.Raw)
+
+  /** `ChecksumFileSystem.rename`, except that a file's `.crc` follows
+    * it by atomic replace. Once the data file's exclusive rename has
+    * won, a `.crc` already at the destination has no data file of its
+    * own (a crash between the two deletes of `delete` leaves one), so
+    * it is replaced, as the stock raw rename did, instead of failing
+    * the rename and leaving a stale checksum next to the new data. */
+  override def rename(src: Path, dst: Path): Boolean =
+    if (raw.isDirectory(src)) raw.rename(src, dst)
+    else {
+      val to = if (raw.isDirectory(dst)) new Path(dst, src.getName) else dst
+      raw.rename(src, to) && {
+        val (srcCrc, dstCrc) = (getChecksumFile(src), getChecksumFile(to))
+        if (raw.exists(srcCrc)) {
+          FileUtil.rename(raw, srcCrc, dstCrc, Options.Rename.OVERWRITE)
+          true
+        } else !raw.exists(dstCrc) || raw.delete(dstCrc, true)
+      }
+    }
 }
 
 object NioLocalFileSystem {

@@ -185,6 +185,31 @@ class NioLocalFileSystemSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("a rename onto a name whose stale .crc outlived its data file " +
+      "replaces the .crc and reads back") {
+    val (_, nio) = fresh("022")
+    val d = Files.createTempDirectory("graft-crc-rename").toString
+    def put(n: String, bytes: Array[Byte]): Path = {
+      val p = new Path(s"$d/$n")
+      val out = nio.create(p)
+      out.write(bytes); out.close()
+      p
+    }
+    val stale = Array.fill[Byte](700)(7)
+    val body = Array.tabulate[Byte](2048)(_.toByte)
+    // what a crash between delete's data unlink and its .crc unlink
+    // leaves: dst's checksum without dst
+    put("dst", stale)
+    assert(new File(s"$d/dst").delete() && new File(s"$d/.dst.crc").isFile)
+    val src = put("src", body)
+    assert(nio.rename(src, new Path(s"$d/dst")))
+    assert(!new File(s"$d/src").exists && !new File(s"$d/.src.crc").exists)
+    val in = nio.open(new Path(s"$d/dst"))
+    val back = new Array[Byte](body.length)
+    try in.readFully(back) finally in.close()
+    assert(back.sameElements(body))
+  }
+
   test("the bundled core-site.xml sets fs.file.impl and nothing else") {
     val url = getClass.getClassLoader.getResource("core-site.xml")
     assert(url != null)
