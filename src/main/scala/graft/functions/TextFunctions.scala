@@ -195,12 +195,6 @@ object TextFunctions {
   def normalize(text: Column): Column =
     trim(regexp_replace(lower(text), "\\s+", " "))
 
-  /** Rolling-window content fingerprint: md5 over each k-token window,
-    * kept as the minimum hex digest — a cheap winnowing-style sketch
-    * for locality-sensitive exact-ish matching. */
-  def windowFingerprint(text: Column, k: Int = 8): Column =
-    array_min(transform(shingles(text, k), s => md5(s.cast("binary"))))
-
   /** Word k-shingles over normalized tokens. Documents shorter than k
     * tokens yield a single shingle of all tokens (never empty for
     * non-empty docs). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -54,22 +54,22 @@ object ConnectedComponents {
     *                (tests pin it to 0 / MaxValue to force a path)
     * @return (node, component): every node that appears in an edge,
     *         labeled with the minimum id reachable from it. The frame
-    *         is localCheckpoint-backed — callers should `unpersist()`
-    *         it once consumed, or its materialized blocks outlive the
-    *         query ([[componentSizes]] does this internally).
+    *         may be localCheckpoint-backed, where `unpersist()` is a
+    *         no-op — callers release it with [[Caches.release]] once
+    *         consumed, or its materialized blocks outlive the query
+    *         ([[componentSizes]] does this internally).
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 25,
       fastPathMaxEdges: Long = FastPathMaxEdges): DataFrame = {
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // capped count (see DriverGate): stops scanning the moment the
-    // gate is exceeded, and materializes the (tiny) edge cache both
-    // branches reuse
-    val small = DriverGate.fitsOnDriver(e, fastPathMaxEdges)
-    val result =
-      if (small) driverUnionFind(e)
-      else distributedHashMin(e, maxIter)
+    // one capped collect (DriverGate) picks the path and, under the
+    // gate, is the edge list; the distributed loop reuses the cache
+    val result = DriverGate.collectAtMost(e, fastPathMaxEdges) match {
+      case Some(rows) => driverUnionFind(e, rows)
+      case None => distributedHashMin(e, maxIter)
+    }
     e.unpersist()
     result
   }
@@ -78,7 +78,7 @@ object ConnectedComponents {
     * the collected edge list. Same output contract as the distributed
     * loop (component id = minimum member id) — the cross-path
     * equality is spec-pinned. */
-  private def driverUnionFind(e: DataFrame): DataFrame = {
+  private def driverUnionFind(e: DataFrame, edges: Array[Row]): DataFrame = {
     val spark = e.sparkSession
     // ids are numeric-or-string; JVM boxes all of them as Comparable.
     // Strings must compare in UTF-8 BYTE order to match Spark's min
@@ -100,7 +100,7 @@ object ConnectedComponents {
       }
       r
     }
-    e.collect().foreach { row =>
+    edges.foreach { row =>
       val (u, v) = (row.get(0), row.get(1))
       if (!parent.containsKey(u)) parent.put(u, u)
       if (!parent.containsKey(v)) parent.put(v, v)
@@ -113,7 +113,7 @@ object ConnectedComponents {
     import scala.jdk.CollectionConverters._
     val idType = e.schema.fields(0).dataType
     val rows = parent.keySet().asScala.toSeq
-      .map(n => org.apache.spark.sql.Row(n, find(n)))
+      .map(n => Row(n, find(n)))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", idType),
       org.apache.spark.sql.types.StructField("component", idType)))

@@ -1,23 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** Shared row-count gate for driver-local fast paths (union-find,
-  * local PageRank/triangle loops). Same license class as a broadcast
-  * threshold: below the gate, driver-local iteration beats several
-  * Spark rounds of job overhead; above it, only the distributed
-  * shape scales — and real 100 TB graphs blow straight past any sane
-  * gate, so the distributed path self-selects. */
+/** The capped driver collect behind every driver-local fast path
+  * (union-find, local PageRank/triangle loops) and bounded key sample.
+  * Same license class as a broadcast threshold: below the cap,
+  * driver-local work beats several Spark rounds of job overhead; above
+  * it, only the distributed shape scales — and real 100 TB inputs blow
+  * straight past any sane cap, so the distributed path self-selects. */
 object DriverGate {
 
-  /** True when `df` has at most `maxRows` rows, established by a
-    * CAPPED count — scanning stops the moment the gate is exceeded
-    * instead of counting the full frame. `limit()` takes an Int, so
-    * gates above Int.MaxValue must clamp: a raw `.toInt` would wrap
-    * negative, make the capped count trivially pass, and let the
-    * caller collect an unbounded frame onto the driver. */
-  def fitsOnDriver(df: DataFrame, maxRows: Long): Boolean = {
-    val cap = math.min(math.max(maxRows, 0L), Int.MaxValue - 1L).toInt
-    df.limit(cap + 1).count() <= maxRows
+  /** The rows of `df` when it has at most `cap` of them, else None:
+    * ONE `limit(cap + 1)` collect that stops scanning past the cap, so
+    * the driver never holds more than `cap + 1` rows and no frame is
+    * counted and then collected again. Caps above Int.MaxValue clamp:
+    * a raw `.toInt` would wrap to a wrong or invalid limit. */
+  def collectAtMost(df: DataFrame, cap: Long): Option[Array[Row]] = {
+    val c = math.min(math.max(cap, 0L), Int.MaxValue - 1L).toInt
+    val rows = df.limit(c + 1).collect()
+    Option.when(rows.length <= c)(rows)
   }
 }

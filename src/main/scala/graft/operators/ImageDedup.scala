@@ -64,7 +64,16 @@ object ImageDedup {
     * null hashes (undecodable images) are skipped. Output:
     * (id_a, id_b, hamming). */
   def nearDupPairs(df: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = MaxHamming): DataFrame = {
+      maxHamming: Int = MaxHamming): DataFrame =
+    // pinned: a long-lived-pipeline operator's caches (the hash cache
+    // here) must not outlive the call
+    withPairs(df, idCol, hashCol, maxHamming)(_.localCheckpoint(true))
+
+  /** Lends the verified pairs, unpinned, to `use` while the hash cache
+    * they read is held (so under the components' fast-path gate one
+    * capped collect is their only action); releases that cache after. */
+  private def withPairs[A](df: DataFrame, idCol: String, hashCol: String,
+      maxHamming: Int)(use: DataFrame => A): A = {
     val h = df.select(col(idCol).as("id"), phashLong(col(hashCol)).as("h"))
       .filter(col("h").isNotNull)
       .persist()
@@ -76,36 +85,31 @@ object ImageDedup {
       .distinct()
     val ha = h.select(col("id").as("id_a"), col("h").as("h_a"))
     val hb = h.select(col("id").as("id_b"), col("h").as("h_b"))
-    // pin the (tiny) verified pair list eagerly so the hash cache can
-    // be released — this is a long-lived-pipeline operator, not a
-    // per-query main, so caches must not outlive the call
     val pairs = cands.join(ha, "id_a").join(hb, "id_b")
       .withColumn("hamming",
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-      .localCheckpoint(true)
-    h.unpersist()
-    pairs
+    try use(pairs) finally h.unpersist()
   }
 
   /** Keep-first survivor set: near-dup pairs → connected components
     * → lowest id per cluster survives. Returns the survivor ids. */
   def survivors(df: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = MaxHamming): DataFrame = {
-    val pairs = nearDupPairs(df, idCol, hashCol, maxHamming)
-    val comp = ConnectedComponents.connectedComponents(
-      pairs, "id_a", "id_b")
-    // pin the (tiny) drop list, then RELEASE the label + pair blocks
-    // through Caches.release — Dataset.unpersist is a no-op on
-    // checkpoint-backed frames (the round-7 lesson), and pipeline
-    // callers invoke this per batch, so silently-lingering blocks
-    // would accumulate until a driver GC
-    val drops = comp.filter(col("node") =!= col("component"))
-      .select(col("node").as("id"))
-      .localCheckpoint(true)
-    Caches.release(comp)
-    Caches.release(pairs)
+    val drops = withPairs(df, idCol, hashCol, maxHamming) { pairs =>
+      val comp = ConnectedComponents.connectedComponents(
+        pairs, "id_a", "id_b")
+      // pin the (tiny) drop list, then RELEASE the label blocks
+      // through Caches.release — Dataset.unpersist is a no-op on
+      // checkpoint-backed frames (the round-7 lesson), and pipeline
+      // callers invoke this per batch, so silently-lingering blocks
+      // would accumulate until a driver GC
+      val d = comp.filter(col("node") =!= col("component"))
+        .select(col("node").as("id")).localCheckpoint(true)
+      Caches.release(comp)
+      d
+    }
     df.select(col(idCol).as("id")).distinct()
       .join(drops, Seq("id"), "left_anti")
   }

@@ -8,9 +8,9 @@ import org.slf4j.LoggerFactory
   * FilterPipeline (DPF/pipelines/filter_pipeline.py:29-165) over an
   * immutable fold instead of shared-mutable processor state.
   *
-  * Differences kept deliberately (SURVEY.md §7.4 risk 5): per-stage
-  * shape logging forces a job per stage, so it is opt-in
-  * (`logCounts`); error policy is per-stage stop/continue like the
+  * Differences kept deliberately (SURVEY.md §7.4 risk 5): stages log
+  * their outcome, not their row counts, because a count forces a job
+  * per stage; error policy is per-stage stop/continue like the
   * reference (`filter_pipeline.py:149-165`).
   */
 object Pipeline {
@@ -58,8 +58,7 @@ object Pipeline {
   private val log = LoggerFactory.getLogger(getClass)
 
   /** Fold the stages over the processor (filter_pipeline.py:149-165). */
-  def run(p: Processor, stages: Seq[Stage],
-      logCounts: Boolean = false): Result = {
+  def run(p: Processor, stages: Seq[Stage]): Result = {
     var cur = p
     val ran = Seq.newBuilder[String]
     val skipped = Seq.newBuilder[String]
@@ -75,9 +74,7 @@ object Pipeline {
         skipped += s.name
       } else Try(s.op(cur)) match {
         case Success(next) =>
-          if (logCounts)
-            log.info(s"pipeline stage ${s.name}: rows=${next.count()}")
-          else log.info(s"pipeline stage ${s.name}: ok")
+          log.info(s"pipeline stage ${s.name}: ok")
           cur = next
           ran += s.name
         case Failure(e) =>

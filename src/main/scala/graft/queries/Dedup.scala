@@ -594,7 +594,7 @@ object Dedup {
     val drops = labels.filter(col("component") =!= col("node"))
       .select(col("node").as("doc_id"))
       .localCheckpoint(true)
-    labels.unpersist()
+    graft.operators.Caches.release(labels)
     drops
   }
 
@@ -628,7 +628,7 @@ object Dedup {
     // contract — same pattern as dedupSurvivors above
     val lab = labels.select(col("node").as("doc_id"), col("component"))
       .localCheckpoint(true)
-    labels.unpersist()
+    graft.operators.Caches.release(labels)
     val q = TextAnalysis.textQuality(spark, dir)
       .select(col("doc_id"), col("quality"))
     val w = Window.partitionBy(col("component"))
@@ -886,6 +886,11 @@ object Dedup {
     * posting count itself — linear. */
   val AllPairsGramK = 5
 
+  /** Prefix-posting count under which allpairsCosine broadcasts its
+    * candidate doc lists: each list has at most this many longs
+    * (≈16 MB), since every candidate doc is a prefix-posting doc. */
+  val AllPairsBroadcastMaxRows = 2L << 20
+
   /** The V^K ≥ N sizing rule as code (the [[Similarity.lshSizing]]
     * precedent, for the exact tier): smallest gram order K whose
     * feature space covers the corpus's gram instances `margin` times
@@ -999,8 +1004,10 @@ object Dedup {
     // the whole tf→window(term)→window(doc) chain (event-log-caught:
     // the term-exchange's 250k-record shuffle written 3× per run,
     // read 2×). One cheap count serializes the chain to exactly one
-    // execution; every later consumer reads blocks. (guide §5)
-    prefixIdx.count()
+    // execution; every later consumer reads blocks (guide §5). Every
+    // doc_a and doc_b below is a prefixIdx doc_id, so the count also
+    // bounds both candidate doc lists for the broadcast choice.
+    val smallDocLists = prefixIdx.count() < AllPairsBroadcastMaxRows
     // near-ids-only through the wide ops (same discipline as the LSH
     // band joins), except each side carries its 8-byte norm so the
     // final gate needs no join back to a norms table
@@ -1019,13 +1026,16 @@ object Dedup {
     // (event-log-caught; the join then executed as broadcast over a
     // shuffle nobody read). The doc lists are bounded by 2·|candidate
     // pairs| longs — the prefix filter's output, the quantity the
-    // whole algorithm exists to keep small; a corpus that overflows
-    // this broadcast has already defeated the verify stage itself.
-    val ta = tf.join(broadcast(cands.select(col("doc_a")).distinct()),
-        col("doc_id") === col("doc_a"), "left_semi")
+    // whole algorithm exists to keep small. Past
+    // [[AllPairsBroadcastMaxRows]] prefix postings the join choice is
+    // left to AQE instead of forcing a driver-built broadcast.
+    def docs(c: String) = {
+      val d = cands.select(col(c)).distinct()
+      if (smallDocLists) broadcast(d) else d
+    }
+    val ta = tf.join(docs("doc_a"), col("doc_id") === col("doc_a"), "left_semi")
       .select(col("doc_id").as("doc_a"), col("term"), col("tf").as("tfa"))
-    val tb = tf.join(broadcast(cands.select(col("doc_b")).distinct()),
-        col("doc_id") === col("doc_b"), "left_semi")
+    val tb = tf.join(docs("doc_b"), col("doc_id") === col("doc_b"), "left_semi")
       .select(col("doc_id").as("doc_b"), col("term"), col("tf").as("tfb"))
     cands.join(ta, "doc_a").join(tb, Seq("doc_b", "term"))
       .groupBy("doc_a", "doc_b", "na", "nb")

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.DriverGate
 import graft.queries.Num._
 
 /** Graph analytics over graphs DERIVED from the event stream — the
@@ -123,13 +124,13 @@ object Graph {
     val (eJoined, eCache) = transitionEdges(ks)
     val e = eJoined.persist()
     val nodes = ks.select(col("k").as("item")).distinct().persist()
-    import graft.operators.DriverGate.fitsOnDriver
-    if (fitsOnDriver(e, fastPathMaxEdges) &&
-        fitsOnDriver(nodes, fastPathMaxEdges)) {
-      val out = driverPagerank(spark, e, nodes)
+    (for {
+      edgeRows <- DriverGate.collectAtMost(e, fastPathMaxEdges)
+      nodeRows <- DriverGate.collectAtMost(nodes, fastPathMaxEdges)
+    } yield {
       e.unpersist(); eCache.unpersist(); nodes.unpersist()
-      out
-    } else {
+      driverPagerank(spark, edgeRows, nodeRows)
+    }).getOrElse {
       val nn = nodes.agg(count(lit(1)).as("n"))
       val r0 = nodes.crossJoin(broadcast(nn))
         .select(col("item"), expr(s"${PrScale}L div n").as("rank"))
@@ -144,11 +145,11 @@ object Graph {
     * ops in the same per-node order-independent sums, so cross-path
     * equality is bit-exact. */
   private def driverPagerank(spark: SparkSession,
-      e: DataFrame, nodeDf: DataFrame): DataFrame = {
+      edgeRows: Array[Row], nodeRows: Array[Row]): DataFrame = {
     import spark.implicits._
-    val edges = e.select(col("src"), col("dst"), col("w"), col("wout"))
-      .as[(Long, Long, Long, Long)].collect()
-    val nodes = nodeDf.as[Long].collect().sorted
+    val edges = edgeRows.map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val nodes = nodeRows.map(_.getLong(0)).sorted
     if (nodes.isEmpty)
       return Seq.empty[(Long, Long, Double)].toDF("item", "rank_int", "rank")
     val n = nodes.length.toLong
@@ -248,10 +249,10 @@ object Graph {
       .persist()
     // node set here IS bounded by the edge list (deg derives from
     // und), so — unlike pagerank — the edge gate alone suffices
-    if (graft.operators.DriverGate.fitsOnDriver(und, fastPathMaxEdges)) {
-      val out = driverTriangles(spark, und)
+    val local = DriverGate.collectAtMost(und, fastPathMaxEdges)
+    if (local.isDefined) {
       und.unpersist()
-      return out
+      return driverTriangles(spark, local.get)
     }
     val deg = und.select(col("u").as("x")).unionAll(und.select(col("v")))
       .groupBy("x").agg(count(lit(1)).as("d"))
@@ -284,9 +285,9 @@ object Graph {
     * same orientation, same per-corner fan, bit-exact cross-path
     * equality (spec-pinned; same license as [[driverPagerank]]). */
   private def driverTriangles(spark: SparkSession,
-      und: DataFrame): DataFrame = {
+      und: Array[Row]): DataFrame = {
     import spark.implicits._
-    val edges = und.as[(Long, Long)].collect()
+    val edges = und.map(r => (r.getLong(0), r.getLong(1)))
     val deg = new scala.collection.mutable.HashMap[Long, Long]()
     edges.foreach { case (u, v) =>
       deg(u) = deg.getOrElse(u, 0L) + 1; deg(v) = deg.getOrElse(v, 0L) + 1

@@ -194,20 +194,20 @@ object MaterializedAgg {
       // skips its own distinct-collect job — round-9, guide §2 fixed
       // costs). An oversized delta falls back to the aggregate-only
       // job and unhinted mutations.
-      val sample = newRows.select(col("gid"), col("n_rows"))
-        .limit(TableLog.InFilterMaxKeys + 1).collect()
-      val (touched, neg, deadNow, gidHint) =
-        if (sample.length <= TableLog.InFilterMaxKeys)
-          (sample.length.toLong,
-            sample.count(_.getLong(1) < 0L).toLong,
-            sample.count(_.getLong(1) == 0L).toLong,
-            Some(sample.map(_.getLong(0))))
-        else {
+      val sample = graft.operators.DriverGate.collectAtMost(
+        newRows.select(col("gid"), col("n_rows")), TableLog.InFilterMaxKeys)
+      val (touched, neg, deadNow, gidHint) = sample match {
+        case Some(rows) =>
+          (rows.length.toLong,
+            rows.count(_.getLong(1) < 0L).toLong,
+            rows.count(_.getLong(1) == 0L).toLong,
+            Some(rows.map(_.getLong(0))))
+        case None =>
           val pre = newRows.agg(count(lit(1)).as("t"),
             count(when(col("n_rows") < 0, 1)).as("neg"),
             count(when(col("n_rows") === 0, 1)).as("dead")).head
           (pre.getLong(0), pre.getLong(1), pre.getLong(2), None)
-        }
+      }
       require(neg == 0,
         s"MaterializedAgg: negative group count maintaining $viewDir " +
           s"from $srcDir v$last→v$head — view and change feed " +

@@ -4,13 +4,14 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil,
-  Options, Path, RawLocalFileSystem}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem,
+  FileUtil, Options, Path, RawLocalFileSystem}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
   LongType, ShortType, StructType}
 
+import graft.operators.DriverGate
 import graft.sources.NioLocalFileSystem
 
 /** Versioned-table tier: a manifest log over plain parquet files —
@@ -130,7 +131,8 @@ object TableLog {
     * constraints and wave violations through). Object stores without
     * atomic rename (raw S3) need a coordinating log store for
     * multi-writer commits — the same caveat every lakehouse format
-    * documents. */
+    * documents. A crash before the publish leaves the temp behind;
+    * [[vacuum]] deletes it. */
   private[queries] def writeSmallFileAtomic(fs: FileSystem, p: Path,
       body: String, overwrite: Boolean): Boolean = {
     val raw = publishFs(fs)
@@ -178,11 +180,15 @@ object TableLog {
       dir: String): Seq[Int] = {
     val ld = logDir(dir)
     if (!fs.exists(ld)) Seq.empty
-    else fs.listStatus(ld).map(_.getPath.getName)
+    else checkpointVersionsOf(fs.listStatus(ld).toSeq)
+  }
+
+  /** The checkpoint versions in a `_log` listing, ascending. */
+  private def checkpointVersionsOf(log: Seq[FileStatus]): Seq[Int] =
+    log.map(_.getPath.getName)
       .collect { case n if n.endsWith(".checkpoint") =>
         n.stripPrefix("v").stripSuffix(".checkpoint").toInt }
-      .sorted.toSeq
-  }
+      .sorted
 
   /** Latest committed version, or -1 for an empty table. On a
     * checkpointed table this reads the pointer and PROBES forward
@@ -1693,36 +1699,27 @@ object TableLog {
       kind: String): Option[BatchKeys] = {
     val keyDt = keys.schema.fields
       .find(f => normName(f.name) == normName(key)).map(_.dataType)
-    if (kind == "string") {
-      val vals = keys.select(col(key).cast("string").as("k"))
-        .filter(col("k").isNotNull)
-        .limit(MaxStatsKeys + 1)
-        .collect().map(_.getString(0))
-      if (vals.isEmpty || vals.length > MaxStatsKeys) None
-      else {
-        val ks = vals.map(encodeStringKey)
-        java.util.Arrays.sort(ks)
-        // exact values only from a genuinely string-typed column (a
-        // cast RENDERING of another type is not the value the join
-        // compares), and only at IN-filter size — no point holding
-        // millions of strings the membership test can never use
-        val strs =
-          if (keyDt.contains(org.apache.spark.sql.types.StringType) &&
-              vals.length <= InFilterMaxKeys) Some(vals)
-          else None
-        Some(BatchKeys(ks, exactLongs = false, strs))
-      }
-    } else {
-      val ks = keys.selectExpr(s"try_cast(`$key` AS BIGINT) AS k")
-        .filter(col("k").isNotNull)
-        .limit(MaxStatsKeys + 1)
-        .collect().map(_.getLong(0))
-      if (ks.isEmpty || ks.length > MaxStatsKeys) None
-      else {
-        java.util.Arrays.sort(ks)
-        Some(BatchKeys(ks, exactLongs = keyDt.exists(isIntegralType),
-          strings = None))
-      }
+    def capped(k: Column): Option[Array[Row]] =
+      DriverGate.collectAtMost(
+        keys.select(k.as("k")).filter(col("k").isNotNull), MaxStatsKeys)
+        .filter(_.nonEmpty)
+    if (kind == "string") capped(col(key).cast("string")).map { rows =>
+      val vals = rows.map(_.getString(0))
+      val ks = vals.map(encodeStringKey)
+      java.util.Arrays.sort(ks)
+      // exact values only from a genuinely string-typed column (a
+      // cast RENDERING of another type is not the value the join
+      // compares), and only at IN-filter size — no point holding
+      // millions of strings the membership test can never use
+      val strs =
+        if (keyDt.contains(org.apache.spark.sql.types.StringType) &&
+            vals.length <= InFilterMaxKeys) Some(vals)
+        else None
+      BatchKeys(ks, exactLongs = false, strs)
+    } else capped(expr(s"try_cast(`$key` AS BIGINT)")).map { rows =>
+      val ks = rows.map(_.getLong(0))
+      java.util.Arrays.sort(ks)
+      BatchKeys(ks, exactLongs = keyDt.exists(isIntegralType), strings = None)
     }
   }
 
@@ -2010,9 +2007,11 @@ object TableLog {
     * below the newest checkpoint at or under the watermark are
     * TRUNCATED (no retained version replays them; the checkpoint
     * carries the txn high-water marks that keep [[appendOnce]]
-    * idempotent), so `_log` stays bounded too. A vacuumed version
-    * fails loudly at [[liveFiles]], not with a missing-file scan
-    * error. Returns the number of data files deleted. */
+    * idempotent), and publish temps a crashed commit left in `_log`
+    * past the grace window are deleted, so `_log` stays bounded too.
+    * A vacuumed version fails loudly at [[liveFiles]], not with a
+    * missing-file scan error. Returns the number of data files
+    * deleted. */
   def vacuum(spark: SparkSession, dir: String,
       retainVersions: Int = 1, orphanGraceMs: Long = 0L): Int = {
     require(retainVersions >= 1, "vacuum must retain >= 1 version")
@@ -2104,19 +2103,29 @@ object TableLog {
           fs.delete(d.getPath, true)
       }
     }
+    // one listing of _log serves both of its sweeps
+    val logFiles = fs.listStatus(logDir(dir)).toSeq
+    // publish temps a crash left between their write and their
+    // rename (see writeSmallFileAtomic); the grace window spares an
+    // in-flight writer's
+    logFiles.filter { st =>
+      val n = st.getPath.getName
+      n.startsWith(".") && n.endsWith(".tmp") &&
+        st.getModificationTime <= cutoff
+    }.foreach(st => fs.delete(st.getPath, false))
     // truncate manifests no retained version replays: everything
     // below the newest checkpoint at or under the watermark (that
     // checkpoint is the replay base for the oldest retained reads,
     // and its txn lines back appendOnce's idempotence)
-    checkpointVersionsListed(fs, dir).filter(_ <= earliest)
-      .sorted.lastOption.foreach { base =>
+    val checkpoints = checkpointVersionsOf(logFiles)
+    checkpoints.filter(_ <= earliest).lastOption.foreach { base =>
       if (base > 0) {
         // walk DOWN and stop at the first gap: manifests are
         // contiguous, so everything below an earlier truncation is
         // already gone — steady-state cost is O(1), not O(versions)
         var v = base - 1
         while (v >= 0 && fs.delete(manifestPath(dir, v), false)) v -= 1
-        checkpointVersionsListed(fs, dir).filter(_ < base).foreach { c =>
+        checkpoints.filter(_ < base).foreach { c =>
           fs.delete(checkpointPath(dir, c), false)
         }
       }

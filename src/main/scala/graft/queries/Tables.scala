@@ -64,14 +64,14 @@ object Tables {
     * fingerprints or ≤ probe-limit rows) and delete the temp dir its
     * plan reads from: without this every bench/oracle invocation of a
     * round-trip query leaks a corpus-sized copy on disk. The collect
-    * is safe precisely because these results are aggregate-scale;
-    * callers with unbounded results must not use this. */
+    * is capped at 10,000 rows: these results are aggregate-scale, and
+    * a larger one fails by name before it reaches the driver. */
   def sealTempResult(spark: SparkSession, df: DataFrame,
       tmpDir: String): DataFrame = {
-    val rows = df.collect()
-    require(rows.length <= 10000,
-      s"sealTempResult: unbounded result (${rows.length} rows) — " +
-        "this helper is for fingerprint/probe-scale outputs only")
+    val rows = graft.operators.DriverGate.collectAtMost(df, 10000)
+      .getOrElse(throw new IllegalArgumentException(
+        "sealTempResult: unbounded result (over 10000 rows) — " +
+          "this helper is for fingerprint/probe-scale outputs only"))
     val schema = df.schema
     val p = new org.apache.hadoop.fs.Path(tmpDir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

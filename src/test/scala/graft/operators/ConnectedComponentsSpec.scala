@@ -81,8 +81,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("gate above Int.MaxValue clamps instead of wrapping negative") {
-    // a wrapped gate made limit(negative) → limit(1), trivially
-    // passing the capped count; the clamp keeps the fast path usable
+    // a wrapped gate would reach limit() negative; DriverGateSpec pins
+    // the clamp itself, this pins the labels through it
     val m = comps(Seq(1L -> 2L, 2L -> 3L), Long.MaxValue - 1)
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
@@ -96,6 +96,24 @@ class ConnectedComponentsSpec extends SparkSpec {
       (u.toLong, v.toLong)
     }
     bothPaths(edges)
+  }
+
+  test("distributed-path labels free their blocks through " +
+      "Caches.release: only the caller's pin stays cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = ConnectedComponents.connectedComponents(
+      Seq(1L -> 2L, 2L -> 3L, 7L -> 8L).toDF("a", "b"), "a", "b",
+      fastPathMaxEdges = 0L)
+    // what a dedup caller keeps: the drop list, pinned
+    val pin = labels.filter($"node" =!= $"component").select($"node")
+      .localCheckpoint(true)
+    Caches.release(labels)
+    val pinId = pin.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(sc.getPersistentRDDs.keySet.diff(before) == pinId.toSet)
+    assert(pin.as[Long].collect().toSet == Set(2L, 3L, 8L))
   }
 
   test("componentSizes summarizes one row per cluster") {

@@ -23,6 +23,13 @@ class AllPairsSpec extends SparkSpec {
     assert(Dedup.allPairsGramSizing(1000000000L, 1000000L) == 2)
   }
 
+  test("both candidate doc lists broadcast under the prefix-posting cap") {
+    val plan = Dedup.allpairsCosine(spark, sf).queryExecution.optimizedPlan
+      .toString
+    assert("Join LeftSemi[^\n]*rightHint=\\(strategy=broadcast\\)".r
+      .findAllIn(plan).size == 2, plan)
+  }
+
   test("pairs found on testdata satisfy the threshold exactly") {
     val out = Dedup.allpairsCosine(spark, sf).collect()
     out.foreach { r =>

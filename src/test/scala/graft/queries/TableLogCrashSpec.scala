@@ -200,6 +200,24 @@ class TableLogCrashSpec extends SparkSpec {
       settled = d => TableLog.vacuum(spark, d, retainVersions = 2)) >= 3)
   }
 
+  test("a commit crashed after writing its log temp: a retry plus " +
+      "vacuum leaves no temp in _log and reads the after-state") {
+    def temps(d: String): Seq[String] =
+      Files.list(java.nio.file.Paths.get(d, "_log")).iterator.asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".tmp")).toSeq
+    def upsert(d: String): Unit =
+      TableLog.upsert(spark, d, Seq((7L, "u7")).toDF("id", "body"), "id")
+    val leftTemps = new AtomicInteger
+    assert(crashMatrix(Some(history))(upsert)(
+      retry = { d =>
+        if (temps(d).nonEmpty) leftTemps.incrementAndGet()
+        upsert(d)
+        TableLog.vacuum(spark, d, retainVersions = 100)
+      },
+      settled = temps) > 5)
+    assert(leftTemps.get > 0, "no crash point left a temp in _log")
+  }
+
   test("addConstraint: every crash point leaves the old or the new set") {
     def add(d: String): Unit =
       TableLog.addConstraint(spark, d, "id_nonneg", "id >= 0")
